@@ -145,12 +145,17 @@ def main() -> None:
     # r14 scaling block was flagged suspect_cpus_ignored because the
     # bench never showed the master it actually ran on
     sc = spark.sparkContext
+    # the conf comes back as text that need not parse as an int:
+    # echo it raw rather than let int() crash the report
+    shuffle_partitions = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        shuffle_partitions = int(shuffle_partitions)
+    except (TypeError, ValueError):
+        pass
     env = {
         "master": sc.master,
         "default_parallelism": sc.defaultParallelism,
-        "shuffle_partitions": int(
-            spark.conf.get("spark.sql.shuffle.partitions")
-        ),
+        "shuffle_partitions": shuffle_partitions,
     }
     detail = {
         "metric": "inventory_total_runtime",

@@ -19,7 +19,11 @@ from dataclasses import dataclass
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-from hands_on_trino_iceberg_superset_spark.session import configure_runtime, get_spark
+from hands_on_trino_iceberg_superset_spark.session import (
+    configure_runtime,
+    get_spark,
+    local_frame,
+)
 
 
 def _split_top_level(text: str) -> list[str]:
@@ -171,8 +175,9 @@ class Engine:
         self.spark = configure_runtime(spark) if spark else get_spark()
         self.default_schema = default_schema
         self._versioned: dict[str, object] = {}
-        #: Trino-spelled metadata-table identifier -> safe view name
-        self._meta_views: dict[str, str] = {}
+        #: Trino-spelled metadata-table identifier (``tbl$snapshots``)
+        #: -> (safe view name, table serving ``metadata_table``, kind)
+        self._meta_views: dict[str, tuple[str, object, str]] = {}
         #: view name (lowercased) -> defining SQL text (CREATE VIEW);
         #: keyed off the SparkSession so every Engine over one session
         #: observes the same view state (the temp views themselves are
@@ -202,19 +207,26 @@ class Engine:
         """Execute SQL text; the Trino-CLI ``--execute`` equivalent.
 
         Supports Trino/Iceberg time-travel syntax on tables
-        registered via :meth:`register_versioned_table`:
+        registered via :meth:`register_iceberg_table` (or the older
+        :meth:`register_versioned_table`):
         ``SELECT ... FROM t FOR VERSION AS OF 3`` and
         ``... FOR TIMESTAMP AS OF TIMESTAMP '2026-01-01 00:00:00'`` —
         and row-level SQL DML on the same tables (the Iceberg-v2
         capability the reference's catalog enables): ``DELETE FROM t
         WHERE …``, ``UPDATE t SET … WHERE …``, ``INSERT INTO t …``,
-        each committing a new snapshot through the copy-on-write
-        :class:`lakehouse.VersionedTable` path.
+        each committing one new snapshot through the table's own
+        copy-on-write DML. Iceberg tables also answer Trino's
+        `` `t$snapshots` `` (history, refs, manifests, files,
+        partitions) metadata tables, each built from current metadata
+        only when a statement reads it.
+
+        Statement results built on the driver — DML ``rows_affected``,
+        CALL and ALTER status, view DDL, the SHOW family,
+        ``information_schema`` — are Arrow-backed local frames
+        (:func:`session.local_frame`): collecting one runs no Spark
+        job.
         """
-        for alias, safe in self._meta_views.items():
-            for quoted in (f"`{alias}`", f'"{alias}"'):
-                if quoted in text:
-                    text = text.replace(quoted, safe)
+        text = self._resolve_meta_views(text)
         if self._CATALOG_DDL_RE.match(text):
             # any statement that can evolve catalog metadata (a
             # CREATE OR REPLACE changing a same-named view's schema,
@@ -248,6 +260,36 @@ class Engine:
         if stats is not None:
             return stats
         return self.spark.sql(self._resolve_time_travel(text))
+
+    def _resolve_meta_views(self, text: str) -> str:
+        """Rewrite Trino's `` `tbl$kind` `` / ``"tbl$kind"`` metadata
+        tables onto their safe twin views, and build each twin the
+        statement reads, from the table's current metadata, just
+        before it runs. A statement reads a twin when it names it, or
+        reads an engine view whose definition names it (definitions
+        are stored rewritten, so they carry the twin's name). Commits
+        build nothing: a twin nobody reads costs nothing."""
+        if not self._meta_views:
+            return text
+        named = set()
+        for alias, (safe, _, _) in self._meta_views.items():
+            for quoted in (f"`{alias}`", f'"{alias}"'):
+                if quoted in text:
+                    text = text.replace(quoted, safe)
+                    named.add(safe)
+        bodies, todo = [], [text.lower()]
+        while todo:
+            seg = todo.pop()
+            for name, body in self._views.items():
+                body = body.lower()
+                if body not in bodies and re.search(
+                        rf"(?<![\w$]){re.escape(name)}(?![\w$])", seg):
+                    bodies.append(body)
+                    todo.append(body)
+        for safe, src, kind in self._meta_views.values():
+            if safe in named or any(safe.lower() in b for b in bodies):
+                src.metadata_table(kind).createOrReplaceTempView(safe)
+        return text
 
     # -- views (the Trino CREATE VIEW surface Superset's virtual
     # -- datasets sit on; reference README.md's catalog supports it) --
@@ -299,7 +341,8 @@ class Engine:
             name = self._view_name(m.group(1)).lower()
             if name not in self._views:
                 raise ValueError(f"view not found: {m.group(1)}")
-            return self.spark.createDataFrame(
+            return local_frame(
+                self.spark,
                 [(f"CREATE VIEW {name} AS {self._views[name]}",)],
                 "create_view string",
             )
@@ -308,15 +351,12 @@ class Engine:
             name = self._view_name(m.group(2)).lower()
             if name not in self._views:
                 if m.group(1):  # IF EXISTS
-                    return self.spark.createDataFrame(
-                        [(False,)], "dropped boolean"
-                    )
+                    return local_frame(self.spark, [(False,)],
+                                       "dropped boolean")
                 raise ValueError(f"view not found: {m.group(2)}")
             del self._views[name]
             self.spark.catalog.dropTempView(name)
-            return self.spark.createDataFrame(
-                [(True,)], "dropped boolean"
-            )
+            return local_frame(self.spark, [(True,)], "dropped boolean")
         m = self._CREATE_VIEW.match(text)
         if m:
             replace, raw_name, body = m.groups()
@@ -548,15 +588,16 @@ class Engine:
                      trino_type(f.dataType.simpleString()))
                     for i, f in enumerate(fields)
                 )
-            self.spark.createDataFrame(
-                rows,
+            local_frame(
+                self.spark, rows,
                 "table_catalog string, table_schema string, "
                 "table_name string, column_name string, "
                 "ordinal_position long, column_default string, "
                 "is_nullable string, data_type string",
             ).createOrReplaceTempView("__information_schema_columns")
         if "tables" in kinds:
-            self.spark.createDataFrame(
+            local_frame(
+                self.spark,
                 [(self._INFO_CATALOG, schema, name,
                   "VIEW" if is_view else "BASE TABLE")
                  for schema, name, _, is_view in entries],
@@ -571,12 +612,14 @@ class Engine:
             except Exception:
                 pass
             schemas |= {self.default_schema, "information_schema"}
-            self.spark.createDataFrame(
+            local_frame(
+                self.spark,
                 [(self._INFO_CATALOG, s) for s in sorted(schemas)],
                 "catalog_name string, schema_name string",
             ).createOrReplaceTempView("__information_schema_schemata")
         if "views" in kinds:
-            self.spark.createDataFrame(
+            local_frame(
+                self.spark,
                 [(self._INFO_CATALOG, self.default_schema, name, sql)
                  for name, sql in sorted(self._views.items())],
                 "table_catalog string, table_schema string, "
@@ -639,8 +682,8 @@ class Engine:
                 row.get(f"hi__{nm}"),
             ))
         out.append((None, None, None, None, float(total), None, None))
-        return self.spark.createDataFrame(
-            out,
+        return local_frame(
+            self.spark, out,
             "column_name string, data_size double, "
             "distinct_values_count double, nulls_fraction double, "
             "row_count double, low_value string, high_value string",
@@ -1639,7 +1682,8 @@ class Engine:
             ))
         names = self._like_filter(sorted(r[0] for r in rows), like)
         keep = set(names)
-        return self.spark.createDataFrame(
+        return local_frame(
+            self.spark,
             sorted((r for r in rows if r[0] in keep)),
             "Function string, `Return Type` string, "
             "`Argument Types` string, `Function Type` string, "
@@ -1663,7 +1707,8 @@ class Engine:
             kind, target, like = "COLUMNS", m.group(1).strip('"'), None
 
         def one_col(col: str, names: list[str]) -> DataFrame:
-            return self.spark.createDataFrame(
+            return local_frame(
+                self.spark,
                 [(n,) for n in self._like_filter(sorted(names), like)],
                 f"{col} string",
             )
@@ -1713,7 +1758,8 @@ class Engine:
                 self.spark.catalog.tableExists(parts[1]):
             name = parts[1]  # default schema = temp-view namespace
         fields = self.spark.table(name).schema.fields
-        return self.spark.createDataFrame(
+        return local_frame(
+            self.spark,
             [(f.name, trino_type(f.dataType.simpleString()), "", "")
              for f in fields],
             "Column string, Type string, Extra string, "
@@ -1804,10 +1850,14 @@ class Engine:
         (:class:`lakehouse.iceberg.IcebergTable` or its directory) to
         the full SQL surface: current-state SELECT, Trino time-travel
         syntax (``FOR VERSION AS OF <snapshot-id>`` /
-        ``FOR TIMESTAMP AS OF``), and routed DELETE/UPDATE/INSERT
-        (copy-on-write, one snapshot per statement) — the same
-        contract :meth:`register_versioned_table` gives the bespoke
-        format, now over metadata any Iceberg reader shares."""
+        ``FOR TIMESTAMP AS OF``), routed DELETE/UPDATE/INSERT
+        (copy-on-write, one snapshot per statement, ``rows_affected``
+        returned as a local frame; UPDATE counts its rows in the scan
+        that finds the touched files) and the `` `name$kind` ``
+        metadata tables, built from current metadata when a statement
+        reads them — the same contract
+        :meth:`register_versioned_table` gives the bespoke format, now
+        over metadata any Iceberg reader shares."""
         from hands_on_trino_iceberg_superset_spark.lakehouse.iceberg import (
             IcebergTable,
         )
@@ -1825,9 +1875,9 @@ class Engine:
         ``FOR TIMESTAMP AS OF``) resolves against its snapshot
         history. Re-registering refreshes the current-state view.
         Tables exposing ``metadata_table`` (spec Iceberg) also get
-        Trino's ``tbl$snapshots``-style introspection views,
-        refreshed on every (re-)registration so SQL DML keeps them
-        current."""
+        Trino's ``tbl$snapshots``-style introspection views; only
+        their names are recorded here, and :meth:`sql` builds a view
+        from current metadata when a statement reads it."""
         table.read().createOrReplaceTempView(name)
         # a re-registration can carry an evolved schema under the
         # same name — invisible to the snapshot cache's entry list
@@ -1840,14 +1890,13 @@ class Engine:
         if hasattr(meta_src, "metadata_table"):
             # Spark view names reject '$', so the Trino-spelled
             # identifier (`tbl$snapshots` / "tbl$snapshots") is
-            # rewritten by Engine.sql onto a safe twin view
+            # rewritten by Engine.sql onto a safe twin view, built
+            # there from current metadata (_resolve_meta_views)
             for kind in ("snapshots", "history", "refs", "manifests",
                          "files", "partitions"):
-                safe = f"__meta_{name}__{kind}"
-                meta_src.metadata_table(kind).createOrReplaceTempView(
-                    safe
+                self._meta_views[f"{name}${kind}"] = (
+                    f"__meta_{name}__{kind}", meta_src, kind
                 )
-                self._meta_views[f"{name}${kind}"] = safe
 
     _CALL = re.compile(
         r"^\s*CALL\s+(?:\w+\.)?system\.(\w+)\s*\((.*)\)\s*;?\s*$",
@@ -1913,9 +1962,7 @@ class Engine:
         )
 
         def status(msg: str) -> DataFrame:
-            return self.spark.createDataFrame(
-                [(msg,)], "result string"
-            )
+            return local_frame(self.spark, [(msg,)], "result string")
 
         if proc == "register_table":
             # Trino signature: (schema_name, table_name, table_location)
@@ -2040,11 +2087,9 @@ class Engine:
                 inner.drop_column(m.group(2))
             else:
                 inner.promote_column(m.group(2), ice_type(m.group(3)))
-            # refresh the current-state + metadata views
+            # refresh the current-state view
             self.register_versioned_table(name, adapter)
-            return self.spark.createDataFrame(
-                [("OK",)], "result string"
-            )
+            return local_frame(self.spark, [("OK",)], "result string")
         return None
 
     _DML_DELETE = re.compile(
@@ -2073,8 +2118,8 @@ class Engine:
                 continue
             name = m.group(1)
             table = self._versioned[name.lower()]
-            before = table.current().row_count
             if pattern is self._DML_DELETE:
+                before = table.current().row_count
                 table.delete(m.group(2))
                 affected = before - table.current().row_count
             elif pattern is self._DML_UPDATE:
@@ -2088,9 +2133,15 @@ class Engine:
                 where = m.group(3) if m.group(3) else "true"
                 # rows_affected = rows the predicate matches (row
                 # count is unchanged by UPDATE, so a before/after
-                # delta can't measure it)
-                affected = table.read().where(where).count()
-                table.update(assignments, where=where)
+                # delta can't measure it). An Iceberg UPDATE counts
+                # them in the scan that finds the touched files;
+                # VersionedTable.update returns its Snapshot, so that
+                # format counts with a scan of its own.
+                if isinstance(table, _IcebergSqlAdapter):
+                    affected = table.update(assignments, where=where)
+                else:
+                    affected = table.read().where(where).count()
+                    table.update(assignments, where=where)
             else:
                 body = m.group(2).strip()
                 if body.upper().startswith("VALUES"):
@@ -2113,13 +2164,13 @@ class Engine:
                         for c, dt in target.dtypes
                     ]
                 )
+                before = table.current().row_count
                 table.append(src)
                 affected = table.current().row_count - before
             # refresh the current-state view
             self.register_versioned_table(name, table)
-            return self.spark.createDataFrame(
-                [(affected,)], "rows_affected long"
-            )
+            return local_frame(self.spark, [(affected,)],
+                               "rows_affected long")
         return None
 
     def _resolve_time_travel(self, text: str):
@@ -2358,8 +2409,9 @@ class _IcebergSqlAdapter:
     def delete(self, predicate):
         self.table.delete(predicate)
 
-    def update(self, assignments, where):
-        self.table.update(assignments, where)
+    def update(self, assignments, where) -> int:
+        """Rows the predicate matched (the statement's rows_affected)."""
+        return self.table.update(assignments, where)
 
     def append(self, df):
         self.table.append(df)

@@ -64,6 +64,7 @@ from hands_on_trino_iceberg_superset_spark.lakehouse.transforms import (
     parse_transform,
     transform_filter,
 )
+from hands_on_trino_iceberg_superset_spark.session import local_frame
 
 HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
 
@@ -848,7 +849,7 @@ class IcebergTable:
                     key=lambda f: f.path,
                 )
                 if not files:
-                    return self.spark.createDataFrame([], plan.schema)
+                    return local_frame(self.spark, [], plan.schema)
                 # through _scan_plan_df, NOT a raw parquet read: the
                 # rename name-mapping coalesce must apply here too,
                 # or files written before a rename diff as all-NULL
@@ -979,7 +980,7 @@ class IcebergTable:
         plan = self.plan_scan(snapshot_id, as_of_ms, filter, ref=ref)
         schema = plan.schema
         if not plan.files:
-            return self.spark.createDataFrame([], schema)
+            return local_frame(self.spark, [], schema)
         df = self._scan_plan_df(plan)
         for col, cond in (filter or {}).items():
             if col not in df.columns:
@@ -1057,8 +1058,8 @@ class IcebergTable:
             )
             for v in variants:
                 rows.append((v, f.path, f.sequence_number))
-        return self.spark.createDataFrame(
-            rows, "fp string, mpath string, data_seq long"
+        return local_frame(
+            self.spark, rows, "fp string, mpath string, data_seq long"
         )
 
     def _path_variants(self, plan: ScanPlan) -> dict[str, DataFileInfo]:
@@ -1677,7 +1678,7 @@ class IcebergTable:
             )
             sub = self._scan_plan_df(sub_plan)
         else:
-            sub = self.spark.createDataFrame([], schema)
+            sub = local_frame(self.spark, [], schema)
         t, s = sub.alias("t"), source.alias("s")
         joined = t.join(F.broadcast(s),
                         F.col(f"t.{on}") == F.col(f"s.{on}"),
@@ -1728,7 +1729,7 @@ class IcebergTable:
         lo = snaps[from_snapshot_id]["sequence-number"]
         hi = snaps[head]["sequence-number"]
         if hi <= lo:
-            return self.spark.createDataFrame([], self.spark_schema())
+            return local_frame(self.spark, [], self.spark_schema())
 
         _, _, manifests = self._read_ocf_at(snaps[head]["manifest-list"])
         paths: list[str] = []
@@ -1755,7 +1756,7 @@ class IcebergTable:
                         self._resolve(e["data_file"]["file_path"])
                     )
         if not paths:
-            return self.spark.createDataFrame([], self.spark_schema())
+            return local_frame(self.spark, [], self.spark_schema())
         return self.spark.read.schema(self.spark_schema()).parquet(*paths)
 
     # ---------------------------------------- partition evolution
@@ -2344,8 +2345,8 @@ class IcebergTable:
                  s["manifest-list"])
                 for s in self.snapshots()
             ]
-            return spark.createDataFrame(
-                rows,
+            return local_frame(
+                spark, rows,
                 "snapshot_id long, parent_id long, sequence_number "
                 "long, committed_at_ms long, operation string, "
                 "manifest_list string",
@@ -2363,8 +2364,8 @@ class IcebergTable:
                  e["snapshot-id"] in ancestors)
                 for e in self.meta.get("snapshot-log", [])
             ]
-            return spark.createDataFrame(
-                rows,
+            return local_frame(
+                spark, rows,
                 "made_current_at_ms long, snapshot_id long, "
                 "is_current_ancestor boolean",
             )
@@ -2373,8 +2374,8 @@ class IcebergTable:
                 (name, r["type"], r["snapshot-id"])
                 for name, r in sorted(self.refs().items())
             ]
-            return spark.createDataFrame(
-                rows, "name string, type string, snapshot_id long"
+            return local_frame(
+                spark, rows, "name string, type string, snapshot_id long"
             )
         if kind == "manifests":
             snap = self._snapshot(None, None)
@@ -2390,8 +2391,8 @@ class IcebergTable:
                  m.get("added_rows_count", 0))
                 for m in manifests
             ]
-            return spark.createDataFrame(
-                rows,
+            return local_frame(
+                spark, rows,
                 "path string, length long, partition_spec_id int, "
                 "content int, sequence_number long, added_files int, "
                 "existing_files int, deleted_files int, "
@@ -2409,8 +2410,8 @@ class IcebergTable:
                  d.sequence_number)
                 for d in plan.deletes
             ]
-            files = spark.createDataFrame(
-                rows,
+            files = local_frame(
+                spark, rows,
                 "content int, file_path string, partition string, "
                 "spec_id int, record_count long, "
                 "file_size_in_bytes long, sequence_number long",
@@ -2538,8 +2539,8 @@ class IcebergTable:
             f.dataType for f in self.spark_schema().fields
             if f.name == column
         )
-        hrows = self.spark.createDataFrame(
-            [(v,) for v in values],
+        hrows = local_frame(
+            self.spark, [(v,) for v in values],
             T.StructType([T.StructField("v", col_type, True)]),
         ).select(F.xxhash64("v").alias("h")).collect()
         hashes = np.array([r.h for r in hrows], dtype=np.int64) \
@@ -2697,7 +2698,7 @@ class IcebergTable:
     # ------------------------------------------------- row-level DML
 
     def delete(self, predicate: str,
-               mode: str = "copy-on-write") -> None:
+               mode: str = "copy-on-write") -> int:
         """Row-level DELETE. ``copy-on-write`` (default): one scan
         finds the files containing matching rows, only those files
         are rewritten; every other live file carries into the new
@@ -2707,27 +2708,28 @@ class IcebergTable:
         delete files (content=1) that every subsequent read
         anti-joins away; write cost is O(deleted rows), not O(touched
         files), the v2 answer to COW write amplification on wide
-        tables. NULL predicate keeps the row (SQL DELETE)."""
+        tables. NULL predicate keeps the row (SQL DELETE). Returns the
+        number of rows deleted."""
         if mode == "merge-on-read":
-            self._mor_dml("delete", predicate, None)
-            return
+            return self._mor_dml("delete", predicate, None)
         if mode != "copy-on-write":
             raise ValueError(f"unknown DML mode {mode!r}")
-        self._cow_rewrite(
+        return self._cow_rewrite(
             "delete", predicate,
             lambda df, pred: df.where(~pred.eqNullSafe(F.lit(True))),
         )
 
     def update(self, assignments: dict[str, str], where: str,
-               mode: str = "copy-on-write") -> None:
+               mode: str = "copy-on-write") -> int:
         """Row-level UPDATE ... SET. ``copy-on-write``: file-granular
         rewrite (see :meth:`delete`). ``merge-on-read``: matched rows
         are positionally deleted and their updated images appended as
         fresh data files in the SAME snapshot — new files have new
-        paths, so the snapshot's own deletes never touch them."""
+        paths, so the snapshot's own deletes never touch them.
+        Returns the number of rows the predicate matched (NULL does
+        not match), which is the statement's rows_affected."""
         if mode == "merge-on-read":
-            self._mor_dml("update", where, assignments)
-            return
+            return self._mor_dml("update", where, assignments)
         if mode != "copy-on-write":
             raise ValueError(f"unknown DML mode {mode!r}")
 
@@ -2744,16 +2746,17 @@ class IcebergTable:
                     cols.append(F.col(name))
             return df.select(*cols)
 
-        self._cow_rewrite("update", where, apply)
+        return self._cow_rewrite("update", where, apply)
 
     def _mor_dml(self, op: str, predicate: str,
-                 assignments: dict[str, str] | None) -> None:
+                 assignments: dict[str, str] | None) -> int:
         """Shared merge-on-read DML: mine matched row positions into
         delete files; for UPDATE additionally append the updated row
-        images. One snapshot, no data-file rewrite."""
+        images. One snapshot, no data-file rewrite. Returns the
+        matched row count: one delete record per matched row."""
         plan = self.plan_scan()
         if not plan.files:
-            return
+            return 0
         pred = F.expr(predicate)
         df = self._scan_plan_df(plan, keep_position=True)
         matched = df.where(pred.eqNullSafe(F.lit(True)))
@@ -2780,7 +2783,7 @@ class IcebergTable:
                 for name in [f.name for f in plan.schema.fields]
             ]
             new_df = matched.select(*data_cols)
-        self._commit_mor(dead, new_df, op)
+        return self._commit_mor(dead, new_df, op)
 
     def equality_delete(self, keys: DataFrame) -> None:
         """Delete by key WITHOUT scanning the table: the keys land in
@@ -2808,11 +2811,12 @@ class IcebergTable:
 
     def _commit_mor(self, dead: DataFrame | None,
                     new_df: DataFrame | None, op: str,
-                    eq_keys: DataFrame | None = None) -> None:
+                    eq_keys: DataFrame | None = None) -> int:
         """Publish a merge-on-read snapshot: positional and/or
         equality delete files (+ optional fresh data files) in new
         manifests; EVERY prior manifest — data and delete — carries
-        verbatim into the new manifest list."""
+        verbatim into the new manifest list. Returns the number of
+        positional delete records written."""
         meta = self.meta
         seq = meta["last-sequence-number"] + 1
         snap_id = seq
@@ -2827,7 +2831,7 @@ class IcebergTable:
                 self._write_eq_delete_files(eq_keys, seq, pfs)
             )
         if not del_files and new_df is None:
-            return  # no matching rows: no new snapshot
+            return 0  # no matching rows: no new snapshot
         entry_fields = [
             {"name": pf["pname"], "field-id": sf["field-id"],
              "type": pf["result_type"]}
@@ -2873,6 +2877,7 @@ class IcebergTable:
                 "added-records": str(added_rows),
             },
         )
+        return dead_rows
 
     def _write_manifest(self, file_dicts: list[dict],
                         entry_fields: list[dict], spec: list[dict],
@@ -3021,26 +3026,30 @@ class IcebergTable:
                 })
         return out
 
-    def _cow_rewrite(self, op: str, predicate: str, transform) -> None:
+    def _cow_rewrite(self, op: str, predicate: str, transform) -> int:
+        """Copy-on-write DML: one probe scan finds the files holding
+        matching rows (live rows only: positional deletes are already
+        subtracted) and counts the matches per file; only those files
+        are rewritten. Returns the matched row count."""
         plan = self.plan_scan()
         if not plan.files:
-            return
+            return 0
         pred = F.expr(predicate)
         variants = self._path_variants(plan)
         df = self._scan_plan_df(plan, keep_position=True)
-        touched_norm = {
-            r.fp
+        touched = {
+            r.fp: r["count"]
             for r in df.where(pred.eqNullSafe(F.lit(True)))
-            .select(F.col(self._FP).alias("fp")).distinct().collect()
+            .groupBy(F.col(self._FP).alias("fp")).count().collect()
         }
-        unknown = touched_norm - set(variants)
+        unknown = touched.keys() - variants.keys()
         if unknown:
             raise RuntimeError(
                 f"touched files not in scan plan: {sorted(unknown)[:3]}"
             )
-        if not touched_norm:
-            return  # no matching rows: no new snapshot
-        touched_mpaths = {variants[t].path for t in touched_norm}
+        if not touched:
+            return 0  # no matching rows: no new snapshot
+        touched_mpaths = {variants[t].path for t in touched}
         carried = [f for f in plan.files if f.path not in touched_mpaths]
         deleted = [f for f in plan.files if f.path in touched_mpaths]
         # the rewrite read applies live positional deletes scoped to
@@ -3054,6 +3063,7 @@ class IcebergTable:
         )
         new_df = transform(self._scan_plan_df(sub_plan), pred)
         self._commit_file_rewrite(new_df, carried, deleted, op)
+        return sum(touched.values())
 
     def _commit_file_rewrite(self, new_df: DataFrame,
                              carried: list[DataFileInfo],

@@ -93,6 +93,7 @@ from hands_on_trino_iceberg_superset_spark.engine import (
     Engine,
     _split_top_level,
 )
+from hands_on_trino_iceberg_superset_spark.session import local_frame
 
 #: rows per protocol page
 PAGE_SIZE = 1000
@@ -547,7 +548,8 @@ class TrinoWireServer:
         import pyspark
 
         view = f"__system_runtime_nodes_{qid}"
-        self.engine.spark.createDataFrame(
+        local_frame(
+            self.engine.spark,
             [("local", self.url, f"spark-{pyspark.__version__}",
               True, "active")],
             "node_id string, http_uri string, node_version string, "
@@ -632,8 +634,8 @@ class TrinoWireServer:
             [T.StructField(n, t, True) for n, t in fields]
         )
         view = f"__system_runtime_tasks_{qid}"
-        self.engine.spark.createDataFrame(
-            rows, schema
+        local_frame(
+            self.engine.spark, rows, schema
         ).createOrReplaceTempView(view)
         return _outside_literals(
             text,
@@ -676,8 +678,8 @@ class TrinoWireServer:
                 for r in self._stmt_log
             ]
         view = f"__system_runtime_queries_{qid}"
-        self.engine.spark.createDataFrame(
-            rows,
+        local_frame(
+            self.engine.spark, rows,
             "query_id string, state string, user string, "
             "query string, created timestamp, finished timestamp",
         ).createOrReplaceTempView(view)
@@ -698,9 +700,9 @@ class TrinoWireServer:
         while the statement executes, then FINISHED/FAILED)."""
         qid = uuid.uuid4().hex
         # tz-AWARE instants (r12 ADVICE): a naive utcnow() would be
-        # reinterpreted in the Spark session timezone at
-        # createDataFrame, shifting created/finished by the TZ
-        # offset on non-UTC sessions (utcnow is also deprecated)
+        # read as process-local time when the runtime views are
+        # built, shifting created/finished by the local offset on
+        # non-UTC hosts (utcnow is also deprecated)
         rec = {
             "query_id": qid, "state": "RUNNING", "user": user or "",
             "query": sql_text,

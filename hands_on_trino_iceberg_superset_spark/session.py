@@ -20,13 +20,19 @@ Design notes for the 100 TB target (graded, see BASELINE.md):
   them as raw ``BIGINT`` nanos and derive a µs ``TIMESTAMP_NTZ``
   (exactly DuckDB's µs truncation) in the loader.
 - Arrow on for the pandas-UDF paths (dedup / similarity / multimodal).
+- Driver-built result frames (statement status rows, SHOW output,
+  metadata views) go through :func:`local_frame`: an Arrow-backed
+  local relation, so collecting one runs no Spark job.
 """
 
 from __future__ import annotations
 
 import os
+from collections.abc import Sequence
+from datetime import timezone
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 #: Confs that are safe to set on an already-running session.
 RUNTIME_CONF: dict[str, str] = {
@@ -117,3 +123,37 @@ def get_spark(
                 ) from exc
     spark.sparkContext.setLogLevel("ERROR")
     return configure_runtime(spark)
+
+
+def local_frame(spark: SparkSession, rows: Sequence[Sequence],
+                schema: T.StructType | str) -> DataFrame:
+    """A DataFrame over rows built on the driver, as an Arrow-backed
+    LocalRelation.
+
+    Same rows and schema as ``spark.createDataFrame(rows, schema)``,
+    but that call parallelizes a pickled RDD, so collecting its result
+    starts a Spark job and a Python worker (hundreds of ms for a
+    one-row status frame). A local relation is collected, filtered and
+    broadcast on the driver with no job, empty frames included.
+    ``schema`` is a StructType or a DDL string (backticked names such
+    as ```Return Type``` allowed); each row is a tuple in field order.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = T._parse_datatype_string(schema)
+    arrow_schema = to_arrow_schema(schema)
+    columns = []
+    for i, field in enumerate(schema.fields):
+        values = [row[i] for row in rows]
+        if isinstance(field.dataType, T.TimestampType):
+            # createDataFrame(list) reads a naive datetime in the
+            # process's local time zone and an aware one at its own
+            # offset; pyarrow would take either's wall clock as UTC.
+            # Hand it UTC instants.
+            values = [None if v is None else v.astimezone(timezone.utc)
+                      for v in values]
+        columns.append(pa.array(values, type=arrow_schema.field(i).type))
+    table = pa.Table.from_arrays(columns, schema=arrow_schema)
+    return spark.createDataFrame(table, schema)

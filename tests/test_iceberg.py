@@ -961,6 +961,113 @@ def test_sql_metadata_tables(spark, tmp_root):
     assert eng.sql("SELECT count(*) AS n FROM mtbl").collect()[0].n == 25
 
 
+def test_sql_metadata_views_build_when_read(spark, tmp_root,
+                                             monkeypatch):
+    """The `t$kind` views are built from current metadata by the
+    statement that reads them, never at registration or commit: after
+    each of INSERT, UPDATE and CALL rewrite_data_files, `t$snapshots`
+    and `t$files` (and an engine view over `t$snapshots`) show the new
+    snapshot, while registration and the commits themselves call
+    metadata_table zero times."""
+    calls: list[str] = []
+    original = IcebergTable.metadata_table
+
+    def spy(self, kind):
+        calls.append(kind)
+        return original(self, kind)
+
+    monkeypatch.setattr(IcebergTable, "metadata_table", spy)
+    path = os.path.join(tmp_root, "lazy_meta")
+    t = IcebergTable.create(spark, path, spark.range(40).selectExpr(
+        "id", "id % 3 AS k"))
+    eng = Engine(spark)
+    eng.register_iceberg_table("lazy_t", t)
+    assert calls == []
+    eng.sql("CREATE OR REPLACE VIEW lazy_head_v AS SELECT max(snapshot_id) "
+            "AS head FROM `lazy_t$snapshots`")
+    assert calls == ["snapshots"]
+    try:
+        for stmt in (
+            "INSERT INTO lazy_t SELECT id + 100, k FROM lazy_t "
+            "WHERE id < 5",
+            "UPDATE lazy_t SET k = 7 WHERE id BETWEEN 10 AND 14",
+            "CALL system.rewrite_data_files(table => 'lazy_t')",
+        ):
+            calls.clear()
+            eng.sql(stmt).collect()
+            assert calls == [], stmt
+            head = t.meta["current-snapshot-id"]
+            snaps = eng.sql(
+                "SELECT snapshot_id FROM `lazy_t$snapshots`").collect()
+            assert head in {r.snapshot_id for r in snaps}, stmt
+            files = eng.sql(
+                'SELECT file_path FROM "lazy_t$files" WHERE content = 0'
+            ).collect()
+            assert {r.file_path for r in files} == \
+                {f.path for f in t.plan_scan().files}, stmt
+            assert eng.sql("SELECT head FROM lazy_head_v") \
+                .collect()[0].head == head, stmt
+            assert sorted(calls) == ["files", "snapshots", "snapshots"]
+    finally:
+        eng.sql("DROP VIEW IF EXISTS lazy_head_v")
+
+
+def test_sql_update_rows_affected_from_probe(spark, tmp_root,
+                                             count_jobs):
+    """SQL UPDATE's rows_affected counts the rows its predicate
+    matches: a row whose predicate is NULL is not counted, and the
+    count comes from the touched-file probe, so the statement runs
+    at most 3 Spark jobs."""
+    path = os.path.join(tmp_root, "upd_rows")
+    t = IcebergTable.create(spark, path, spark.range(100).selectExpr(
+        "id", "IF(id % 10 = 0, NULL, id) AS n", "0 AS v"))
+    eng = Engine(spark)
+    eng.register_iceberg_table("upd_rows_t", t)
+    out, jobs = count_jobs(lambda: eng.sql(
+        "UPDATE upd_rows_t SET v = 1 WHERE n < 50").collect())
+    # ids 1..49 minus the NULL-n ids 10, 20, 30, 40
+    assert out[0].rows_affected == 45
+    assert jobs <= 3
+    assert eng.sql("SELECT count(*) AS c FROM upd_rows_t WHERE v = 1") \
+        .collect()[0].c == 45
+    none = eng.sql("UPDATE upd_rows_t SET v = 2 WHERE id < 0").collect()
+    assert none[0].rows_affected == 0
+
+
+def test_sql_update_rows_affected_skips_mor_deleted_rows(spark,
+                                                         tmp_root):
+    """On a table carrying merge-on-read position deletes, rows those
+    deletes removed are not counted (nor updated) by a SQL UPDATE."""
+    path = os.path.join(tmp_root, "upd_rows_mor")
+    t = IcebergTable.create(spark, path, spark.range(100).selectExpr(
+        "id", "0 AS v"))
+    assert t.delete("id < 20", mode="merge-on-read") == 20
+    assert t.plan_scan().deletes
+    eng = Engine(spark)
+    eng.register_iceberg_table("upd_rows_mor_t", t)
+    out = eng.sql(
+        "UPDATE upd_rows_mor_t SET v = 1 WHERE id < 50").collect()
+    assert out[0].rows_affected == 30
+    rows = eng.sql("SELECT count(*) AS c, sum(v) AS s "
+                   "FROM upd_rows_mor_t").collect()[0]
+    assert (rows.c, rows.s) == (80, 30)
+
+
+def test_mor_dml_reports_matched_count(spark, tmp_root):
+    """The merge-on-read DML path returns its matched row count too
+    (one position-delete record per matched row); NULL predicates
+    and already-deleted rows do not count."""
+    path = os.path.join(tmp_root, "mor_count")
+    t = IcebergTable.create(spark, path, spark.range(60).selectExpr(
+        "id", "IF(id % 10 = 0, NULL, id) AS n", "0 AS v"))
+    assert t.update({"v": "1"}, "n < 30", mode="merge-on-read") == 27
+    assert t.delete("n < 10", mode="merge-on-read") == 9
+    # ids 11..29 still live (minus NULL-n 20): updated again
+    assert t.update({"v": "2"}, "n < 30", mode="merge-on-read") == 18
+    assert t.delete("id < 0", mode="merge-on-read") == 0
+    assert t.read().where("v = 2").count() == 18
+
+
 def test_zorder_compaction_prunes_both_dimensions(spark, tmp_root):
     """Z-order clustering: after rewrite_data_files(zorder=True) on
     (x, y), a narrow range predicate on EITHER column prunes files —

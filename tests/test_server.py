@@ -1157,71 +1157,117 @@ def test_cancel_propagates_to_running_spark_jobs(server, spark):
     assert rec["finished"] is not None
 
 
-def test_cancel_stops_streaming_statement(server, spark):
+def test_cancel_stops_streaming_statement(server, spark, tmp_path):
     """DELETE-cancel must reach a STREAMING statement's drain: the
     drain's Spark jobs run in the microbatch thread (outside the
     statement's job group), so the server stops the registered
     StreamingQuery through the engine — and the statement reports
-    USER_CANCELED instead of returning a partial snapshot."""
+    USER_CANCELED instead of returning a partial snapshot.
+
+    The test holds the stream open until the DELETE lands: a
+    blocker job occupies every executor slot first, so the drain's
+    first microbatch cannot run a task. The DELETE is sent once the
+    statement's query is registered for cancel, and the statement
+    must end, with its query stopped, while the slots are still
+    held: the drain cannot have finished on its own. No wall-clock
+    race decides the outcome. The events table is a bare parquet
+    scan, so the stream reads its files directly and the statement
+    runs no batch job before the drain starts."""
     import threading
     import time
 
     import pyspark.sql.functions as F
 
-    # a drain big enough to outlive the cancel round trip even on a
-    # cold session: 8M synthetic events -> ~2M sessions through
-    # session_window (several seconds of drain; the DELETE lands
-    # ~100ms after the streaming query turns active)
-    n = 8_000_000
-    (spark.range(n).select(
-        (F.col("id") % 400_000).alias("user_id"),
+    from hands_on_trino_iceberg_superset_spark.engine import (
+        _SESSION_STREAMS,
+        _STREAMS_LOCK,
+    )
+
+    events = str(tmp_path / "cancel_stream_events")
+    spark.range(20_000).select(
+        (F.col("id") % 1_000).alias("user_id"),
         (F.to_timestamp(F.lit("2024-01-01 00:00:00"))
          + (F.col("id") * F.expr("INTERVAL 1 SECOND"))).alias("ts"),
         F.lit(1.0).alias("value"),
-    )).createOrReplaceTempView("cancel_stream_events_v")
+    ).write.parquet(events)
+    spark.read.parquet(events).createOrReplaceTempView(
+        "cancel_stream_events_v")
     marker_sql = (
         "SELECT count(*) AS n FROM TABLE(stream_sessionize("
         "events => 'cancel_stream_events_v', gap => '5 minutes'))"
     )
+    sc = spark.sparkContext
+    slots = sc.defaultParallelism
+    hold = "cancel_stream_hold"
+
+    def block_slots() -> None:
+        sc.setJobGroup(hold, "hold every slot", interruptOnCancel=True)
+        try:
+            spark.range(0, slots, 1, slots).selectExpr(
+                "reflect('java.lang.Thread', 'sleep', 600000L)"
+            ).collect()
+        except Exception:  # noqa: BLE001 — released by cancel
+            pass
+
+    def seam_active():
+        return [q for q in spark.streams.active
+                if (q.name or "").startswith("__stream_")]
+
+    def wait_for(cond, what: str) -> None:
+        deadline = time.time() + 120
+        while not cond():
+            assert time.time() < deadline, what
+            time.sleep(0.05)
+
+    def running_hold_tasks() -> int:
+        st = sc.statusTracker()
+        stages = [sid for j in st.getJobIdsForGroup(hold)
+                  for sid in (st.getJobInfo(j).stageIds
+                              if st.getJobInfo(j) else [])]
+        return sum(st.getStageInfo(sid).numActiveTasks
+                   for sid in stages if st.getStageInfo(sid))
+
     result: dict = {}
 
     def run() -> None:
         result["payload"] = _post(server, marker_sql)
 
+    blocker = threading.Thread(target=block_slots)
     t = threading.Thread(target=run)
-    t.start()
-    # wait until the statement's streaming query is live
-    def seam_active():
-        return [q for q in spark.streams.active
-                if (q.name or "").startswith("__stream_")]
+    blocker.start()
+    try:
+        wait_for(lambda: running_hold_tasks() == slots,
+                 "blocker never held every slot")
+        t.start()
+        qid = None
 
-    deadline = time.time() + 60
-    qid = None
-    while time.time() < deadline:
-        active = seam_active()
-        with server._lock:
-            for r in server._stmt_log:
-                if (r["query"] == marker_sql
-                        and r["finished"] is None):
-                    qid = r["query_id"]
-        if qid is not None and active:
-            break
-        time.sleep(0.05)
-    assert qid, "streaming statement never appeared as RUNNING"
-    assert seam_active(), "drain never started"
-    req = urllib.request.Request(
-        f"{server.url}/v1/statement/{qid}/0", method="DELETE")
-    urllib.request.urlopen(req)
-    t.join(timeout=60)
-    assert not t.is_alive(), "cancelled streaming statement hung"
+        def registered() -> bool:
+            nonlocal qid
+            with server._lock:
+                for r in server._stmt_log:
+                    if (r["query"] == marker_sql
+                            and r["finished"] is None):
+                        qid = r["query_id"]
+            with _STREAMS_LOCK:
+                return bool(qid and _SESSION_STREAMS[spark].get(qid))
+
+        wait_for(registered, "streaming drain never registered")
+        assert seam_active(), "drain never started"
+        req = urllib.request.Request(
+            f"{server.url}/v1/statement/{qid}/0", method="DELETE")
+        urllib.request.urlopen(req)
+        t.join(timeout=60)
+        assert not t.is_alive(), "cancelled streaming statement hung"
+        # the drain's streaming query is gone, not burning the
+        # cluster — stopped by the DELETE, as it could not have
+        # drained with every slot held
+        assert not seam_active()
+    finally:
+        sc.cancelJobGroup(hold)
+        blocker.join(timeout=60)
     payload = result["payload"]
     assert payload["stats"]["state"] == "FAILED"
     assert payload["error"]["errorName"] == "USER_CANCELED"
-    # the drain's streaming query is gone, not burning the cluster
-    deadline = time.time() + 20
-    while seam_active() and time.time() < deadline:
-        time.sleep(0.2)
-    assert not seam_active()
 
 
 def test_cancel_raced_completion_reports_canceled(server):
