@@ -417,21 +417,21 @@ class Engine:
         twin views (``__meta_*``, ``__information_schema_*``) stay
         hidden. Driver-side by design: catalog metadata, never data.
 
-        Listed via ``SHOW TABLES`` / ``SHOW VIEWS`` collects — one
-        JVM round trip per statement — NOT ``catalog.listTables``,
-        which marshals a full Table object per entry over py4j
-        (3.3 s vs 0.6 s at a 2k-view catalog; this listing runs in
-        every introspection statement's cache key, so it IS the warm
-        path — tools/infoschema_cache_bench.py). ``is_view`` keeps
-        the prior ``tableType == "VIEW"`` semantics: permanent views
+        Listed via ``SHOW DATABASES`` / ``SHOW TABLES`` / ``SHOW
+        VIEWS`` collects, NOT ``spark.catalog.list*``: in PySpark 4
+        each of those collects a Dataset through ``toLocalIterator``
+        and so runs Spark jobs (``listDatabases`` 3-4 jobs,
+        ``listTables`` 2 per database) where the SQL commands answer
+        from the driver with none. ``listTables`` also marshals a
+        full Table object per entry over py4j (3.3 s vs 0.6 s at a
+        2k-view catalog; this listing runs in every introspection
+        statement's cache key, so it IS the warm path —
+        tools/infoschema_cache_bench.py). ``is_view`` keeps the
+        prior ``tableType == "VIEW"`` semantics: permanent views
         count, direct temp views don't (engine-registered views are
         tracked in ``self._views``)."""
-        try:
-            dbs = [d.name for d in self.spark.catalog.listDatabases()]
-        except Exception:
-            dbs = []
         entries: dict[tuple[str, str], tuple[str, str, str, bool]] = {}
-        for db in [None, *dbs]:
+        for db in [None, *self._schema_names()]:
             suffix = f" IN `{db}`" if db else ""
             try:
                 tables = self.spark.sql(
@@ -606,11 +606,7 @@ class Engine:
             ).createOrReplaceTempView("__information_schema_tables")
         if "schemata" in kinds:
             schemas = {s for s, *_ in entries}
-            try:
-                schemas |= {d.name for d in
-                            self.spark.catalog.listDatabases()}
-            except Exception:
-                pass
+            schemas |= set(self._schema_names())
             schemas |= {self.default_schema, "information_schema"}
             local_frame(
                 self.spark,
@@ -719,7 +715,8 @@ class Engine:
     #       docs => 'documents',       -- lexical side (BM25)
     #       corpus => 'embeddings'     -- vector side: exact, OR
     #       [index => 'emb_ivf'],      --   IVF probe at scale
-    #       queries => 'q_view',       -- (qid, qtext, qvec)
+    #       queries => 'q_view',       -- (qid, qtext, qvec); NULL
+    #                                  --   qvec = lexical arm only
     #       k => 10 [, c => 60] [, n_probe => 8] [, col names...]))
     #     -> (qid, rank, doc_id, r_lex, r_vec, rrf)  -- RRF fusion
     #
@@ -989,8 +986,9 @@ class Engine:
                    else self.spark.table(str(args["queries"])))
         if fn == "hybrid_topk":
             # the hybrid queries table carries (qid, qtext, qvec);
+            # a NULL qvec is a lexical-only query (no vector arm);
             # shape the vector side to the corpus' column names
-            queries = queries.select(
+            queries = queries.where(F.col("qvec").isNotNull()).select(
                 F.col("qid").alias(id_col),
                 F.col("qvec").alias(vec_col),
             )
@@ -1626,17 +1624,51 @@ class Engine:
         )
         return [n for n in names if rx.match(n)]
 
+    #: catalogs every session answers to without asking Spark: the
+    #: reference clients' ``iceberg`` and Spark's own session catalog
+    _BUILTIN_CATALOGS = frozenset({_INFO_CATALOG, "spark_catalog"})
+
     def _catalog_names(self) -> set[str]:
         """The ONE catalog set every catalog-shaped answer serves
-        (SHOW CATALOGS, SHOW SCHEMAS FROM validation; the wire
-        server's _known_catalogs reads the same shape) — the two
-        built-ins plus whatever the Spark session has registered."""
-        cats = {self._INFO_CATALOG, "spark_catalog"}
+        (SHOW CATALOGS, SHOW SCHEMAS FROM validation, the wire
+        server's session-context check via :meth:`has_catalog`) —
+        the two built-ins plus whatever the Spark session has
+        registered. ``SHOW CATALOGS`` answers from the driver's
+        catalog manager; PySpark's ``Catalog.listCatalogs`` returns the
+        same names but runs a Spark job to collect them."""
+        cats = set(self._BUILTIN_CATALOGS)
         try:
-            cats |= {c.name for c in self.spark.catalog.listCatalogs()}
+            cats |= {r[0] for r in
+                     self.spark.sql("SHOW CATALOGS").collect()}
         except Exception:
             pass
         return cats
+
+    def _schema_names(self) -> list[str]:
+        """Every database of the session catalog, from ``SHOW
+        DATABASES`` (driver-side, no Spark job — unlike
+        PySpark's ``Catalog.listDatabases``, which runs several)."""
+        try:
+            return [r[0] for r in
+                    self.spark.sql("SHOW DATABASES").collect()]
+        except Exception:
+            return []
+
+    def has_catalog(self, name: str) -> bool:
+        """Whether ``name`` (any case) is a catalog this engine
+        answers to: the built-ins without a JVM call, anything else
+        looked up in :meth:`_catalog_names` so the accepted set is
+        exactly the one ``SHOW CATALOGS`` serves."""
+        name = name.lower()
+        return name in self._BUILTIN_CATALOGS or name in {
+            c.lower() for c in self._catalog_names()}
+
+    def has_schema(self, name: str) -> bool:
+        """Whether ``name`` is a database of the session catalog —
+        one driver-side lookup (the catalog normalises case as it
+        does for every identifier), no listing."""
+        return bool(self.spark._jsparkSession.sessionState()
+                    .catalog().databaseExists(name))
 
     #: window-ranking functions Spark files under plain
     #: ``expressions`` (no package marker to classify by)
@@ -1719,16 +1751,10 @@ class Engine:
             # validate against the SAME catalog set SHOW CATALOGS
             # serves (r12 ADVICE: a catalog listed there could be
             # refused here when only the two built-ins were checked)
-            if target is not None and target.lower() not in {
-                c.lower() for c in self._catalog_names()
-            }:
+            if target is not None and not self.has_catalog(target):
                 raise ValueError(f"unknown catalog: {target!r}")
-            schemas = {self.default_schema, "information_schema"}
-            try:
-                schemas |= {d.name for d in
-                            self.spark.catalog.listDatabases()}
-            except Exception:
-                pass
+            schemas = {self.default_schema, "information_schema",
+                       *self._schema_names()}
             return one_col("Schema", list(schemas))
         if kind == "FUNCTIONS":
             return self._show_functions(like)
@@ -1828,9 +1854,14 @@ class Engine:
         ]
 
     def tables(self, schema: str | None = None) -> list[str]:
+        """Table and view names visible in ``schema`` (session temp
+        views included, as PySpark's ``Catalog.listTables`` lists them),
+        via ``SHOW TABLES IN`` — no Spark job."""
         return [
-            t.name
-            for t in self.spark.catalog.listTables(schema or self.default_schema)
+            r.tableName
+            for r in self.spark.sql(
+                f"SHOW TABLES IN `{schema or self.default_schema}`"
+            ).collect()
         ]
 
     def describe(self, table: str) -> DataFrame:

@@ -1048,6 +1048,9 @@ def bi_chart_hybrid_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         Database,
     )
     from hands_on_trino_iceberg_superset_spark.engine import Engine
+    from hands_on_trino_iceberg_superset_spark.queries.text import (
+        _anchor_hybrid_queries,
+    )
     from hands_on_trino_iceberg_superset_spark.sources import (
         load_table,
     )
@@ -1056,21 +1059,8 @@ def bi_chart_hybrid_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     docs.createOrReplaceTempView("bi_hyb_docs_v")
     emb.createOrReplaceTempView("bi_hyb_corpus_v")
-    (
-        docs.where(F.col("doc_id") % 100 == 0)
-        .join(emb, docs.doc_id == emb.vec_id)
-        .select(
-            F.col("doc_id").alias("qid"),
-            F.array_join(
-                F.slice(
-                    F.filter(F.split("text", " "), lambda w: w != ""),
-                    1, 3,
-                ),
-                " ",
-            ).alias("qtext"),
-            F.col("embedding").alias("qvec"),
-        )
-    ).createOrReplaceTempView("bi_hyb_queries_v")
+    _anchor_hybrid_queries(docs, emb).createOrReplaceTempView(
+        "bi_hyb_queries_v")
     ds = Database("spark", Engine(spark)).dataset(
         "hybrid_hits",
         sql=(

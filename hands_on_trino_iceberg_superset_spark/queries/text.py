@@ -535,6 +535,14 @@ def text_chunking(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _perplexity_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id, lang, t) token rows text_perplexity_buckets scores —
+    shared with its plan gate so the gate checks this very frame."""
+    return load_table(spark, sf_dir, "documents").select(
+        "doc_id", "lang", _tokens().alias("t")
+    )
+
+
 def _perplexity_scored(toks: DataFrame) -> DataFrame:
     """The per-document scoring subtree of text_perplexity_buckets —
     factored out (r15 optimization round) so the plan gate in
@@ -723,8 +731,7 @@ def _perplexity_scored(toks: DataFrame) -> DataFrame:
 def text_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    docs = load_table(spark, sf_dir, "documents")
-    toks = docs.select("doc_id", "lang", _tokens().alias("t"))
+    toks = _perplexity_tokens(spark, sf_dir)
     # per-document scoring rows, referenced by BOTH the tertile-
     # threshold histogram and the final bucket join — one stored copy
     # instead of re-running the whole scoring pipeline (tokenize +
@@ -1231,6 +1238,30 @@ def search_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return R.bm25_topk(docs, _bm25_queries_df(spark), k=10)
 
 
+def _anchor_lexical_queries(docs: DataFrame) -> DataFrame:
+    """(qid, qtext) of the hybrid queries' anchors: every 100th
+    document, queried by its first three non-empty tokens."""
+    return docs.where(F.col("doc_id") % 100 == 0).select(
+        F.col("doc_id").alias("qid"),
+        F.array_join(
+            F.slice(F.filter(F.split("text", " "), lambda w: w != ""),
+                    1, 3),
+            " ",
+        ).alias("qtext"),
+    )
+
+
+def _anchor_hybrid_queries(docs: DataFrame, emb: DataFrame) -> DataFrame:
+    """(qid, qtext, qvec) queries table for TABLE(hybrid_topk(...)):
+    every anchor with its lexical query, and its embedding where it
+    has one — a NULL ``qvec`` makes that query lexical-only."""
+    return (
+        _anchor_lexical_queries(docs)
+        .join(emb, F.col("qid") == emb.vec_id, "left")
+        .select("qid", "qtext", F.col("embedding").alias("qvec"))
+    )
+
+
 @register(
     "search_hybrid_rrf",
     oracle=f"""
@@ -1329,13 +1360,6 @@ def search_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(emb, docs.doc_id == emb.vec_id)
         .select(
             F.col("doc_id").alias("qid"),
-            F.array_join(
-                F.slice(
-                    F.filter(F.split("text", " "), lambda w: w != ""),
-                    1, 3,
-                ),
-                " ",
-            ).alias("qtext"),
             F.col("embedding").alias("qvec"),
         )
     # NOT checkpointed, adjudicated r15: anchors feed BOTH arms and a
@@ -1347,9 +1371,10 @@ def search_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     # operators carry explicit broadcast hints, making it
     # strategy-neutral there.
     )
-    lex = R.bm25_topk(
-        docs, anchors.select("qid", "qtext"), k=10
-    )
+    # lexical queries from the documents alone, as in the oracle: an
+    # anchor without an embedding keeps its lexical arm (the join
+    # above feeds the vector arm only)
+    lex = R.bm25_topk(docs, _anchor_lexical_queries(docs), k=10)
     # exact cosine ranking (the oracle's quadratic twin); IVF probe
     # is the scale swap, same (qid, rank, doc_id) contract
     pairs = (
@@ -1496,7 +1521,8 @@ _HYBRID_RANKED_SQL = f"""{_BM25_SCORED_SQL},
         "the whole lexical+vector stack is SQL/wire/BI-reachable. "
         "The queries table carries (qid, qtext, qvec): every 100th "
         "document anchors with its first three tokens and its "
-        "embedding, same fixture as search_hybrid_rrf. ONE stated "
+        "embedding (NULL when it has none: lexical arm only), same "
+        "fixture as search_hybrid_rrf. ONE stated "
         "semantic difference from that query: the SQL vector arm "
         "rides cosine_topk, which excludes self-matches "
         "(neighbor_id != query_id — an ANN store never returns the "
@@ -1512,21 +1538,8 @@ def sql_hybrid_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     docs.createOrReplaceTempView("sql_hyb_docs_v")
     emb.createOrReplaceTempView("sql_hyb_corpus_v")
-    (
-        docs.where(F.col("doc_id") % 100 == 0)
-        .join(emb, docs.doc_id == emb.vec_id)
-        .select(
-            F.col("doc_id").alias("qid"),
-            F.array_join(
-                F.slice(
-                    F.filter(F.split("text", " "), lambda w: w != ""),
-                    1, 3,
-                ),
-                " ",
-            ).alias("qtext"),
-            F.col("embedding").alias("qvec"),
-        )
-    ).createOrReplaceTempView("sql_hyb_queries_v")
+    _anchor_hybrid_queries(docs, emb).createOrReplaceTempView(
+        "sql_hyb_queries_v")
     return Engine(spark).sql(
         "SELECT qid, rank, doc_id, r_lex, r_vec, rrf "
         "FROM TABLE(hybrid_topk(docs => 'sql_hyb_docs_v', "

@@ -465,12 +465,6 @@ class TrinoWireServer:
 
     # --------------------------------------- session catalog/schema
 
-    def _known_catalogs(self) -> set[str]:
-        """Catalog names a client may connect with: the reference's
-        ``iceberg`` (init_db.py:8-9 URI), Spark's own, and any
-        catalog actually registered on the session."""
-        return {c.lower() for c in self.engine._catalog_names()}
-
     def _schema_database(self, catalog: str | None,
                          schema: str | None) -> str | None:
         """Validate the request's session context (X-Trino-Catalog /
@@ -481,23 +475,24 @@ class TrinoWireServer:
         Spark resolves first regardless of current database). Unknown
         catalog/schema are refused loudly, like session properties:
         a silently-ignored context would let a client read the wrong
-        tables."""
-        if catalog is not None and \
-                catalog.lower() not in self._known_catalogs():
+        tables. The check runs on every statement, so it asks the
+        engine membership questions (no listing, no Spark job); the
+        known names are listed only for the refusal message."""
+        engine = self.engine
+        if catalog is not None and not engine.has_catalog(catalog):
             raise ValueError(
                 f"unknown catalog: {catalog!r} (connect with "
-                f"{sorted(self._known_catalogs())})"
+                f"{sorted({c.lower() for c in engine._catalog_names()})})"
             )
         if schema is None:
             return None
-        if schema.lower() == self.engine.default_schema.lower():
+        if schema.lower() == engine.default_schema.lower():
             return None
-        dbs = {d.name.lower()
-               for d in self.engine.spark.catalog.listDatabases()}
-        if schema.lower() not in dbs:
+        if not engine.has_schema(schema):
+            dbs = {d.lower() for d in engine._schema_names()}
             raise ValueError(
                 f"unknown schema: {schema!r} (one of "
-                f"{sorted(dbs | {self.engine.default_schema.lower()})})"
+                f"{sorted(dbs | {engine.default_schema.lower()})})"
             )
         return schema
 

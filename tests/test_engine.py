@@ -63,6 +63,64 @@ def test_show_catalogs_probe(spark) -> None:
     assert "spark_catalog" in cats
 
 
+def test_catalog_helpers_match_pyspark_listings_without_jobs(
+        spark, tmp_path, count_jobs) -> None:
+    """The engine's catalog/schema/table listings name exactly what
+    PySpark's Catalog.list* calls name (the oracle here), and none of
+    them runs a Spark job (the list* calls do)."""
+    eng = Engine(spark)
+    spark.sql("CREATE DATABASE IF NOT EXISTS helper_parity_db")
+    spark.range(3).write.mode("overwrite").parquet(str(tmp_path / "t"))
+    spark.sql(
+        "CREATE TABLE IF NOT EXISTS helper_parity_db.t "
+        f"USING parquet LOCATION '{tmp_path / 't'}'"
+    )
+    spark.sql("CREATE OR REPLACE VIEW helper_parity_db.v AS "
+              "SELECT id FROM helper_parity_db.t")
+    spark.range(1).createOrReplaceTempView("helper_parity_tmp")
+    spark.range(1).createOrReplaceTempView("__helper_parity_hidden")
+    try:
+        cats, jobs = count_jobs(eng._catalog_names)
+        assert jobs == 0
+        assert cats == {"iceberg", "spark_catalog"} | {
+            c.name for c in spark.catalog.listCatalogs()}
+
+        dbs, jobs = count_jobs(eng._schema_names)
+        assert jobs == 0
+        oracle_dbs = sorted(d.name for d in spark.catalog.listDatabases())
+        assert sorted(dbs) == oracle_dbs
+        assert "helper_parity_db" in dbs
+
+        for db in oracle_dbs:
+            names, jobs = count_jobs(lambda db=db: eng.tables(db))
+            assert jobs == 0
+            assert sorted(names) == sorted(
+                t.name for t in spark.catalog.listTables(db))
+        assert {"t", "v", "helper_parity_tmp"} <= set(
+            eng.tables("helper_parity_db"))
+
+        entries, jobs = count_jobs(eng._info_entries)
+        assert jobs == 0
+        oracle = set()
+        for t in [*spark.catalog.listTables(),
+                  *(t for db in oracle_dbs
+                    for t in spark.catalog.listTables(db))]:
+            if t.name.startswith("__"):
+                continue
+            schema = (eng.default_schema
+                      if t.isTemporary and not t.namespace
+                      else t.namespace[0])
+            oracle.add((schema.lower(), t.name.lower()))
+        assert {(s.lower(), n.lower()) for s, n, _, _ in entries} \
+            == oracle
+        assert ("helper_parity_db", "v") in oracle
+        assert ("demo", "helper_parity_tmp") in oracle
+    finally:
+        spark.catalog.dropTempView("helper_parity_tmp")
+        spark.catalog.dropTempView("__helper_parity_hidden")
+        spark.sql("DROP DATABASE IF EXISTS helper_parity_db CASCADE")
+
+
 def test_sql_time_travel_on_versioned_table(spark, tmp_path):
     """Trino/Iceberg time-travel syntax through the SQL entry point:
     FOR VERSION AS OF and FOR TIMESTAMP AS OF against a registered

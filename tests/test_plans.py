@@ -344,19 +344,13 @@ def test_perplexity_model_joins_broadcast_at_test_scale(spark, inv, sf_dir):
     # broadcast at this corpus size WITHOUT a forced hint on cb/cu
     # (Catalyst must pick it from parquet-derived stats; a stats-
     # erasing checkpoint below the model joins would regress this).
-    import pyspark.sql.functions as F
-
     from hands_on_trino_iceberg_superset_spark.queries.text import (
         _perplexity_scored,
-        _tokens,
+        _perplexity_tokens,
     )
-    from hands_on_trino_iceberg_superset_spark.sources import load_table
 
-    toks = load_table(spark, sf_dir, "documents").select(
-        "doc_id", "lang", _tokens().alias("t")
-    )
     scoring = (
-        _perplexity_scored(toks)
+        _perplexity_scored(_perplexity_tokens(spark, sf_dir))
         ._jdf.queryExecution().executedPlan().toString()
     )
     assert scoring.count("BroadcastHashJoin") >= 3

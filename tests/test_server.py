@@ -934,6 +934,36 @@ def test_show_schemas_accepts_every_listed_catalog(server):
     assert "unknown catalog" in bad["error"]["message"]
 
 
+def test_catalog_questions_run_no_spark_jobs(server, spark):
+    """Every wire statement validates its X-Trino-Catalog/Schema
+    headers, and the catalog listings answer from the driver: none of
+    it may start a Spark job (PySpark's listCatalogs/listDatabases
+    each collect through jobs). Counted in the statement's own job
+    group (the reply id) after the listener bus drains."""
+    sc = spark.sparkContext
+    had_tpch = spark._jsparkSession.sessionState().catalog() \
+        .databaseExists("tpch")
+    spark.sql("CREATE DATABASE IF NOT EXISTS tpch")
+    hdrs = {"X-Trino-Catalog": "iceberg", "X-Trino-Schema": "tpch"}
+    try:
+        for sql in ("SHOW CATALOGS", "SHOW SCHEMAS",
+                    "SELECT table_name FROM information_schema.tables"):
+            out, _ = _post_h(server, sql, headers=hdrs)
+            assert "error" not in out, out.get("error")
+            sc._jsc.sc().listenerBus().waitUntilEmpty()
+            jobs = list(sc.statusTracker().getJobIdsForGroup(out["id"]))
+            assert jobs == [], (sql, jobs)
+        # the schema header is case-insensitive
+        out, _ = _post_h(server, "SELECT 1 AS x",
+                         headers={"X-Trino-Catalog": "iceberg",
+                                  "X-Trino-Schema": "TPCH"})
+        assert "error" not in out, out.get("error")
+        assert out["data"] == [[1]]
+    finally:
+        if not had_tpch:
+            spark.sql("DROP DATABASE IF EXISTS tpch CASCADE")
+
+
 def test_bare_describe_is_show_columns(server, spark):
     """Trino's bare DESCRIBE t / DESC t alias SHOW COLUMNS FROM t —
     same Column/Type/Extra/Comment shape over the wire; Spark's own
