@@ -34,8 +34,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     Dict order IS the driver's per-round check window (a ~50-entry
     prefix): ``load_all`` orders by re-check priority — failed or
     never-oracle-verified driver records first, then never-checked,
-    then green-but-code-changed-since (import-closure vs the round
-    marker commits), then oldest green round first."""
+    then greens by oldest driver round first."""
     inv = load_all()
     return {name: spec.spark for name, spec in inv.items()}
 

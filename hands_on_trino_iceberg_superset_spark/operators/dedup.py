@@ -554,16 +554,13 @@ def containment_pairs_auto(
             word_shingles(F.col(text_col), n), lambda s: F.xxhash64(s)
         ).alias("sh"),
     ).where(F.size("sh") > 0).localCheckpoint(eager=False)
+    # not stored: the stats probe reads it once, and the blocked
+    # route's hot list re-aggregates the stored ``shingled`` rows
     per_shingle = (
         shingled.select(F.explode("sh").alias("s"))
         .groupBy("s")
         .agg(F.count(F.lit(1)).alias("c"))
     )
-    if max_df is not None:
-        # two consumers on the capped route (stats agg + hot-list
-        # filter): store the distinct-shingle-sized frame instead of
-        # re-running the postings aggregate
-        per_shingle = per_shingle.localCheckpoint(eager=False)
     live = F.lit(True) if max_df is None else F.col("c") <= max_df
     row = per_shingle.agg(
         F.sum(F.when(live, F.col("c")).otherwise(F.lit(0)))

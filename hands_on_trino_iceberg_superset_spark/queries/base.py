@@ -40,9 +40,8 @@ REGISTRY: dict[str, QuerySpec] = {}
 
 # the driver's CORRECTNESS snapshot covers roughly this many inventory
 # entries per round; load_all() orders the inventory so the window
-# always re-checks the rows whose driver record is OLDEST (freshness
-# rotation — see the load_all docstring for the r13->r14 policy
-# change and its rationale).
+# re-checks failed and never-checked rows first, then the greens whose
+# driver record is OLDEST (freshness rotation).
 _WINDOW = 50
 
 
@@ -101,633 +100,6 @@ def _check_failed(rec: dict, has_oracle: bool) -> bool:
     return True
 
 
-def _module_closure() -> dict[str, set]:
-    """module name -> set of package source Paths it transitively
-    imports (including itself), resolved by ast-parsing each module's
-    imports (a regex scan proved fragile: a pattern whose name class
-    crossed newlines swallowed the NEXT import statement and silently
-    dropped dependency edges). Used to decide whether a query's code
-    changed since its last driver check. Memoized per process — the
-    working tree is fixed for a process lifetime."""
-    import ast
-    from pathlib import Path
-
-    cached = getattr(_module_closure, "_cache", None)
-    if cached is not None:
-        return cached
-
-    pkg_root = Path(__file__).resolve().parents[1]
-    pkg = pkg_root.name
-    srcs = {p for p in pkg_root.rglob("*.py")}
-    by_mod: dict[str, Path] = {}
-    for p in srcs:
-        rel = p.relative_to(pkg_root).with_suffix("")
-        mod = ".".join(rel.parts)
-        by_mod[mod] = p
-        if rel.name == "__init__":
-            by_mod[".".join(rel.parts[:-1])] = p
-
-    # registry/ordering machinery is imported by EVERY query module;
-    # an edit to it doesn't change query semantics, so keep it out of
-    # dependency edges or one ordering tweak marks all 143 queries
-    # "changed"
-    here = Path(__file__).resolve()
-    infra = {here, here.parent / "__init__.py"}
-    direct: dict[Path, set] = {}
-    for p in srcs:
-        deps = set()
-        try:
-            tree = ast.parse(p.read_text())
-        except (OSError, SyntaxError):
-            tree = ast.Module(body=[], type_ignores=[])
-        for node in ast.walk(tree):
-            if isinstance(node, ast.ImportFrom) and node.module:
-                mod = node.module
-                if node.level:
-                    # relative import: resolve against this file's
-                    # package path
-                    rel_pkg = p.relative_to(pkg_root).parts[
-                        : -(node.level)
-                    ]
-                    mod = ".".join([*rel_pkg, mod])
-                elif mod == pkg:
-                    mod = ""
-                elif mod.startswith(pkg + "."):
-                    mod = mod[len(pkg) + 1:]
-                else:
-                    continue
-                if mod in by_mod:
-                    deps.add(by_mod[mod])
-                for alias in node.names:
-                    sub = f"{mod}.{alias.name}" if mod else alias.name
-                    if sub in by_mod:
-                        deps.add(by_mod[sub])
-            elif isinstance(node, ast.Import):
-                for alias in node.names:
-                    if alias.name.startswith(pkg + "."):
-                        sub = alias.name[len(pkg) + 1:]
-                        if sub in by_mod:
-                            deps.add(by_mod[sub])
-        direct[p] = deps - infra
-
-    closure: dict[Path, set] = {}
-
-    def close(p: Path, seen: frozenset) -> set:
-        if p in closure:
-            return closure[p]
-        out = {p}
-        for d in direct.get(p, ()):
-            if d not in seen:
-                out |= close(d, seen | {p})
-        closure[p] = out
-        return out
-
-    result = {mod: close(path, frozenset())
-              for mod, path in by_mod.items()}
-    _module_closure._cache = result
-    return result
-
-
-def _round_markers() -> dict[int, str]:
-    """round number -> commit hash of the driver commit that recorded
-    that round's CORRECTNESS snapshot (``round N: ...`` subject).
-    Empty when git is unavailable. Memoized per process."""
-    import re
-    import subprocess
-    from pathlib import Path
-
-    cached = getattr(_round_markers, "_cache", None)
-    if cached is not None:
-        return cached
-
-    root = Path(__file__).resolve().parents[2]
-    markers: dict[int, str] = {}
-    try:
-        log = subprocess.run(
-            ["git", "log", "--format=%H %s"], cwd=root,
-            capture_output=True, text=True, timeout=30, check=True,
-        ).stdout
-        for line in log.splitlines():  # newest first; keep newest
-            m = re.match(r"([0-9a-f]+) round (\d+):", line)
-            if m and int(m.group(2)) not in markers:
-                markers[int(m.group(2))] = m.group(1)
-    except Exception:
-        markers = {}
-    _round_markers._cache = markers
-    return markers
-
-
-def _changed_since_round() -> "Callable[[str, int], bool]":
-    """Return ``changed(module_name, round) -> bool``: did any package
-    file in the query module's import closure change after the driver
-    commit that recorded round N's CORRECTNESS snapshot? Falls back to
-    "not changed" when git/markers are unavailable (ordering then
-    degrades to pure staleness, never crashes the driver). Memoized
-    per process — load_all() is called repeatedly (queries() +
-    oracle_sql() at driver startup, per-test imports) and the git
-    subprocess + full-package scan must run once, not per call.
-
-    This is the COARSE fallback: the closure is file-granular, so one
-    new query appended to queries/dedup.py marks every dedup query
-    "changed". :func:`_changed_per_query` (anchor-segment diff) is the
-    primary signal; this one only decides when anchors error out."""
-    import subprocess
-    from pathlib import Path
-
-    cached = getattr(_changed_since_round, "_cache", None)
-    if cached is not None:
-        return cached
-
-    root = Path(__file__).resolve().parents[2]
-    markers = _round_markers()
-
-    closure = _module_closure()
-    pkg_name = Path(__file__).resolve().parents[1].name
-    changed_files: dict[int, set] = {}
-
-    def files_changed_after(rnd: int) -> set:
-        if rnd not in changed_files:
-            try:
-                # marker vs WORKING TREE (no HEAD operand):
-                # uncommitted edits are code changes too
-                out = subprocess.run(
-                    ["git", "diff", "--name-only", markers[rnd],
-                     "--", pkg_name],
-                    cwd=root, capture_output=True, text=True,
-                    timeout=30, check=True,
-                ).stdout
-                changed_files[rnd] = {
-                    (root / f).resolve() for f in out.splitlines() if f
-                }
-            except Exception:
-                changed_files[rnd] = set()
-        return changed_files[rnd]
-
-    def changed(module_name: str, rnd: int) -> bool:
-        if rnd not in markers:
-            return False
-        deps = closure.get(module_name)
-        if not deps:
-            return False
-        return bool(deps & files_changed_after(rnd))
-
-    _changed_since_round._cache = changed
-    return changed
-
-
-def _top_level_segments(text: str) -> dict[str, str]:
-    """Module text -> {anchor: source segment}: ``"def:<name>"`` for
-    every top-level function/class (decorators INCLUDED — the
-    ``@register(..., oracle=...)`` call is part of a query's
-    content), ``"const:<NAME>"`` for every top-level simple
-    assignment, and ``""`` for the whole file. Line-slice based, so
-    a segment changes iff its text changed."""
-    import ast
-
-    out = {"": text}
-    try:
-        tree = ast.parse(text)
-    except SyntaxError:
-        return out
-    lines = text.splitlines()
-
-    def seg(start_lineno: int, end_lineno: int) -> str:
-        return "\n".join(lines[start_lineno - 1:end_lineno])
-
-    for node in tree.body:
-        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef,
-                             ast.ClassDef)):
-            start = min([node.lineno]
-                        + [d.lineno for d in node.decorator_list])
-            out["def:" + node.name] = seg(start, node.end_lineno)
-        elif (isinstance(node, ast.Assign) and len(node.targets) == 1
-              and isinstance(node.targets[0], ast.Name)):
-            out["const:" + node.targets[0].id] = seg(
-                node.lineno, node.end_lineno)
-        elif isinstance(node, ast.AnnAssign) and isinstance(
-                node.target, ast.Name):
-            out["const:" + node.target.id] = seg(
-                node.lineno, node.end_lineno)
-    return out
-
-
-def _file_segments(relpath: str, rev: str | None) -> dict[str, str] | None:
-    """Anchor segments of a repo file at a git rev (``None`` = the
-    working tree). ``None`` result = unreadable at that rev (file did
-    not exist yet -> caller treats every anchor as changed). Memoized
-    per (rev, relpath) — the expensive parts are one ``git show`` and
-    one ast.parse each."""
-    import subprocess
-    from pathlib import Path
-
-    cache = getattr(_file_segments, "_cache", None)
-    if cache is None:
-        cache = _file_segments._cache = {}
-    key = (rev, relpath)
-    if key in cache:
-        return cache[key]
-    root = Path(__file__).resolve().parents[2]
-    try:
-        if rev is None:
-            text = (root / relpath).read_text()
-        else:
-            text = subprocess.run(
-                ["git", "show", f"{rev}:{relpath}"], cwd=root,
-                capture_output=True, text=True, timeout=30, check=True,
-            ).stdout
-        segs = _top_level_segments(text)
-    except Exception:
-        segs = None
-    cache[key] = segs
-    return segs
-
-
-def _relative_base(relpath: str, level: int) -> list[str]:
-    """Package parts a level-``level`` relative import resolves
-    against, for the module at ``relpath``. For a package
-    ``__init__.py`` the module IS the package, so level 1 refers to
-    the package itself (one fewer strip than a plain module —
-    stripping ``__init__`` and then also applying ``[:-level]``
-    resolved one package too high)."""
-    from pathlib import Path
-
-    parts = list(Path(relpath).with_suffix("").parts)
-    if parts and parts[-1] == "__init__":
-        parts = parts[:-1]
-        level -= 1
-    if level <= 0:
-        return parts
-    return parts[:-level] if level <= len(parts) else []
-
-
-def _import_const_origins(relpath: str) -> dict[str, tuple[str, str]]:
-    """Module-level ``from X import NAME [as ALIAS]`` aliases of
-    IN-PACKAGE modules in one file: alias -> (imported-from module's
-    relpath, original name). Used to anchor a constant in the file
-    whose top-level assignment DEFINES it — an imported const has no
-    assignment segment in the importing module, so diffing its anchor
-    there would compare None == None at both revs and silently
-    under-report oracle-prefix changes (e.g. SEED_CTE imported into
-    queries/bi.py). Memoized per relpath."""
-    import ast
-    import importlib
-    from pathlib import Path
-
-    cache = getattr(_import_const_origins, "_cache", None)
-    if cache is None:
-        cache = _import_const_origins._cache = {}
-    if relpath in cache:
-        return cache[relpath]
-
-    pkg_root = Path(__file__).resolve().parents[1]
-    pkg = pkg_root.name
-    root = pkg_root.parent
-    out: dict[str, tuple[str, str]] = {}
-    try:
-        tree = ast.parse((root / relpath).read_text())
-    except Exception:
-        cache[relpath] = out
-        return out
-    for node in tree.body:
-        if not (isinstance(node, ast.ImportFrom) and node.module):
-            continue
-        modname = node.module
-        if node.level:
-            modname = ".".join(
-                [*_relative_base(relpath, node.level), modname]
-            )
-        if not modname.startswith(pkg):
-            continue
-        try:
-            m = importlib.import_module(modname)
-        except Exception:
-            continue
-        f = getattr(m, "__file__", None)
-        if not f:
-            continue
-        try:
-            mrp = Path(f).resolve().relative_to(root).as_posix()
-        except ValueError:
-            continue
-        for alias in node.names:
-            out[alias.asname or alias.name] = (mrp, alias.name)
-    cache[relpath] = out
-    return out
-
-
-def _const_anchor(relpath: str, name: str) -> tuple[str, str]:
-    """Anchor key for a module-level constant referenced as ``name``
-    in the module at ``relpath``: follow ``from X import NAME``
-    chains until a file whose top-level assignment actually carries a
-    ``const:`` segment. When no assignment segment exists anywhere on
-    the chain (tuple unpacking, __init__ re-export of a computed
-    value), anchor the WHOLE FILE of the last module reached — coarse
-    for that one query, but a change is never silently dropped."""
-    seen: set = set()
-    rp, n = relpath, name
-    while (rp, n) not in seen:
-        seen.add((rp, n))
-        segs = _file_segments(rp, None)
-        if segs is not None and ("const:" + n) in segs:
-            return (rp, "const:" + n)
-        nxt = _import_const_origins(rp).get(n)
-        if nxt is None:
-            break
-        rp, n = nxt
-    return (rp, "")
-
-
-def _query_anchors() -> dict[str, set]:
-    """query name -> set of (relpath, anchor) content keys.
-
-    The FINE-GRAINED change signal the driver rotation sorts on: a
-    query's content is its registering function's source (decorators,
-    so the oracle expression too) PLUS every in-package function,
-    class, and module-level constant reachable from it — resolved at
-    runtime by walking code objects (``co_names``/nested consts)
-    through ``__globals__``, the same graph the interpreter would
-    traverse, so renames/moves are tracked for free. Module-alias
-    uses (``WP.encode_words``) resolve via attribute-name
-    intersection with the module's namespace. Decorator-expression
-    names (oracle-builder helpers like ``_wp_encode_oracle``) are
-    resolved from the module AST since import-time calls never appear
-    in the function's own code object."""
-    import ast
-    import sys
-    import types
-    from pathlib import Path
-
-    cached = getattr(_query_anchors, "_cache", None)
-    if cached is not None:
-        return cached
-
-    pkg_root = Path(__file__).resolve().parents[1]
-    pkg = pkg_root.name
-    root = pkg_root.parent
-
-    def rel_of_module(mod) -> str | None:
-        f = getattr(mod, "__file__", None)
-        if not f:
-            return None
-        try:
-            return Path(f).resolve().relative_to(root).as_posix()
-        except ValueError:
-            return None
-
-    def codes_of(fn) -> list:
-        out, stack = [], [fn.__code__]
-        while stack:
-            co = stack.pop()
-            out.append(co)
-            stack.extend(c for c in co.co_consts
-                         if isinstance(c, types.CodeType))
-        return out
-
-    def functions_of(obj) -> list:
-        """The plain functions carrying code for a function/class."""
-        if isinstance(obj, types.FunctionType):
-            return [obj]
-        fns = []
-        for v in vars(obj).values():
-            if isinstance(v, (staticmethod, classmethod)):
-                v = v.__func__
-            elif isinstance(v, property):
-                v = v.fget
-            if isinstance(v, types.FunctionType):
-                fns.append(v)
-        return fns
-
-    def bases_of(obj) -> list:
-        """In-package base classes of a referenced class — their
-        segments are part of the behavior the subclass inherits."""
-        if not isinstance(obj, type):
-            return []
-        return [b for b in obj.__mro__[1:]
-                if getattr(b, "__module__", "").split(".")[0] == pkg]
-
-    # per-module AST facts: {relpath: ({fn: decorator Name ids},
-    #                                  {fn: {alias: object}})} — the
-    # second map resolves FUNCTION-LOCAL imports ("from ...operators
-    # import wordpiece as WP" inside a def), which never appear in
-    # __globals__
-    mod_facts: dict[str, tuple] = {}
-
-    def facts(relpath: str) -> tuple:
-        if relpath not in mod_facts:
-            decs: dict[str, set] = {}
-            localimp: dict[str, dict] = {}
-            try:
-                tree = ast.parse((root / relpath).read_text())
-                for node in tree.body:
-                    if not isinstance(node, (ast.FunctionDef,
-                                             ast.AsyncFunctionDef)):
-                        continue
-                    ids: set = set()
-                    for d in node.decorator_list:
-                        ids |= {n.id for n in ast.walk(d)
-                                if isinstance(n, ast.Name)}
-                    decs[node.name] = ids
-                    localimp[node.name] = _resolve_imports(
-                        node, relpath)
-            except Exception:
-                pass
-            mod_facts[relpath] = (decs, localimp)
-        return mod_facts[relpath]
-
-    def _resolve_imports(fn_node, relpath: str) -> dict:
-        """alias -> imported in-package object/module, for every
-        import statement nested anywhere inside the def."""
-        import importlib
-
-        out: dict = {}
-        for node in ast.walk(fn_node):
-            if isinstance(node, ast.ImportFrom) and node.module:
-                modname = node.module
-                if node.level:  # relative: resolve against this file
-                    modname = ".".join(
-                        [*_relative_base(relpath, node.level),
-                         node.module]
-                    )
-                if not modname.startswith(pkg):
-                    continue
-                try:
-                    m = importlib.import_module(modname)
-                except Exception:
-                    continue
-                for alias in node.names:
-                    tgt = getattr(m, alias.name, None)
-                    if tgt is None:
-                        try:
-                            tgt = importlib.import_module(
-                                modname + "." + alias.name)
-                        except Exception:
-                            continue
-                    out[alias.asname or alias.name] = tgt
-            elif isinstance(node, ast.Import):
-                for alias in node.names:
-                    if not alias.name.startswith(pkg):
-                        continue
-                    try:
-                        out[alias.asname or alias.name.split(".")[0]] \
-                            = importlib.import_module(alias.name)
-                    except Exception:
-                        continue
-        return out
-
-    def anchors_for(query_fn) -> set:
-        anchors: set = set()
-        seen: set = set()
-        stack = [(query_fn, True)]
-        while stack:
-            obj, is_query_root = stack.pop()
-            if id(obj) in seen:
-                continue
-            seen.add(id(obj))
-            mod = sys.modules.get(getattr(obj, "__module__", ""))
-            rp = rel_of_module(mod) if mod is not None else None
-            if rp is None:
-                continue
-            top = obj.__qualname__.split(".")[0]
-            anchors.add((rp, "def:" + top))
-            for b in bases_of(obj):
-                stack.append((b, False))
-            names: set = set()
-            globs: dict = {}
-            for fn in functions_of(obj):
-                globs = fn.__globals__
-                for co in codes_of(fn):
-                    names |= set(co.co_names)
-                # closure cells: a nested def captured from an outer
-                # factory — include callables they carry
-                for cell in (fn.__closure__ or ()):
-                    try:
-                        v = cell.cell_contents
-                    except ValueError:
-                        continue
-                    if isinstance(v, (types.FunctionType, type)):
-                        stack.append((v, False))
-            decs, localimp = facts(rp)
-            if is_query_root:
-                names |= decs.get(top, set())
-            local = localimp.get(top, {})
-            # local-import aliases land in co_varnames, not co_names
-            # — consider every one referenced
-            for n in names | set(local):
-                v = local.get(n, _query_anchors)
-                if v is _query_anchors:
-                    v = globs.get(n, _query_anchors)
-                if v is _query_anchors:
-                    continue  # builtin / attribute-only name
-                if isinstance(v, (types.FunctionType, type)):
-                    if getattr(v, "__module__", "").split(".")[0] == pkg:
-                        stack.append((v, False))
-                elif isinstance(v, types.ModuleType):
-                    if not v.__name__.startswith(pkg):
-                        continue
-                    mrp = rel_of_module(v)
-                    if mrp is None:
-                        continue
-                    hit = False
-                    for attr in names:
-                        a = getattr(v, attr, None)
-                        if isinstance(a, (types.FunctionType, type)) \
-                                and getattr(a, "__module__", "") \
-                                == v.__name__:
-                            stack.append((a, False))
-                            hit = True
-                        elif a is not None and not isinstance(
-                                a, types.ModuleType) and not callable(a):
-                            anchors.add(_const_anchor(mrp, attr))
-                            hit = True
-                    if not hit:
-                        anchors.add((mrp, ""))  # whole-module fallback
-                elif not callable(v):
-                    # module-level constant: anchored in its DEFINING
-                    # file (import chains followed), not the referrer
-                    anchors.add(_const_anchor(rp, n))
-        return anchors
-
-    # registry machinery is infra (same policy as _module_closure):
-    # edits to it never change query semantics. And GENERATED code
-    # (dataclass __create_fn__ wrappers etc.) has no top-level source
-    # segment anywhere — such anchors would diff None==None forever,
-    # and with the both-missing fallback would coarsely mark whole
-    # modules changed; they carry no content, so drop them.
-    here_rp = Path(__file__).resolve().relative_to(root).as_posix()
-    init_rp = (Path(__file__).resolve().parent / "__init__.py") \
-        .relative_to(root).as_posix()
-    infra_rps = {here_rp, init_rp}
-
-    def clean(aset: set) -> set:
-        out = set()
-        for rp, a in aset:
-            if rp in infra_rps:
-                continue
-            if a:
-                segs = _file_segments(rp, None)
-                if segs is None or a not in segs:
-                    continue
-            out.add((rp, a))
-        return out
-
-    result = {name: clean(anchors_for(spec.spark))
-              for name, spec in REGISTRY.items()}
-    _query_anchors._cache = result
-    return result
-
-
-def _changed_per_query() -> "Callable[[str, int], bool]":
-    """Return ``changed(query_name, round) -> bool`` comparing every
-    anchor segment of the query at HEAD's working tree against the
-    round-marker commit. Missing file/anchor at the marker = the code
-    is new since then = changed. Any mechanical failure falls back to
-    the coarse import-closure signal so the rotation never crashes
-    and never silently under-reports a change."""
-    cached = getattr(_changed_per_query, "_cache", None)
-    if cached is not None:
-        return cached
-
-    markers = _round_markers()
-    closure_changed = _changed_since_round()
-    try:
-        anchors = _query_anchors()
-    except Exception:
-        anchors = {}
-
-    pkg = __name__.split(".", 1)[0]
-
-    def module_of(name: str) -> str:
-        return REGISTRY[name].spark.__module__.split(pkg + ".", 1)[-1]
-
-    def changed(name: str, rnd: int) -> bool:
-        if rnd not in markers:
-            return False
-        keys = anchors.get(name)
-        if not keys:
-            return closure_changed(module_of(name), rnd)
-        try:
-            for rp, anchor in keys:
-                cur = _file_segments(rp, None)
-                old = _file_segments(rp, markers[rnd])
-                if cur is None or old is None:
-                    return True
-                if cur.get(anchor) != old.get(anchor):
-                    return True
-                if anchor and cur.get(anchor) is None \
-                        and old.get(anchor) is None:
-                    # anchor resolves nowhere at EITHER rev (should
-                    # not happen post-_const_anchor; defense): coarse
-                    # closure decides rather than None==None silence
-                    if closure_changed(module_of(name), rnd):
-                        return True
-            return False
-        except Exception:
-            return closure_changed(module_of(name), rnd)
-
-    _changed_per_query._cache = changed
-    return changed
-
-
 def load_all() -> dict[str, QuerySpec]:
     """Import every query module (side effect: registration) and
     return the full inventory.
@@ -738,36 +110,13 @@ def load_all() -> dict[str, QuerySpec]:
 
     1. latest driver record was anything short of a full pass (err,
        a False match flag, or a rows-only ``no_oracle`` check of a
-       query that has an oracle now);
+       query that has an oracle now), by round;
     2. never driver-checked;
-    3. everything else by OLDEST driver snapshot round first
-       (freshness rotation); within one round, rows whose CONTENT —
-       the registering function's source segment (decorators/oracle
-       included) plus every reachable in-package helper/constant
-       anchor (:func:`_query_anchors`) — changed since that round's
-       driver commit sort before unchanged ones. Ties keep a stable
-       family grouping.
+    3. green, OLDEST driver round first (freshness rotation).
 
-    FRESHNESS-FIRST (r14 policy, prescribed by the r13 verdict's
-    staleness item): through r13 a green-but-code-changed row
-    outranked EVERY stale green regardless of age, so one round that
-    edited a widely-shared anchor (Engine, the BI compiler) flipped
-    ~35 wire/bi/sql rows to "changed" and squeezed the oldest green
-    cohort out of the window — the r8 cohort (35 rows) could never
-    drain while the engine kept evolving. Round number now dominates:
-    a row checked at r8 outranks one checked at r13 whose code
-    changed since, because BOTH are locally re-proven every round by
-    the full sf0.01 DuckDB differential (tools/check_correctness.py)
-    — the driver window only decides which subset gets a FRESH
-    driver-side record, and the scarcer resource is oldest-record
-    freshness, not changed-code coverage. The trade: a changed row
-    with a recent record waits a few rounds for its driver re-check
-    (its local differential still gates every round); no row can age
-    indefinitely, which the old ordering could not guarantee. The
-    former reserved-tail "staleness floor" is subsumed: the oldest
-    greens now head the rotation by construction, so no reserve is
-    needed and urgent rows (failed / never-checked) still take every
-    slot they need first.
+    Ties keep a stable family grouping, then the name. The local
+    DuckDB differential (tools/check_correctness.py) re-checks every
+    query every round, so the driver window only needs freshness.
     """
     from hands_on_trino_iceberg_superset_spark.queries import (  # noqa: F401
         bi,
@@ -799,18 +148,14 @@ def load_all() -> dict[str, QuerySpec]:
                  for name, spec in REGISTRY.items()}
     rank = {m: i for i, m in enumerate(family_order)}
     last_seen = _last_driver_check()
-    changed = _changed_per_query()
 
-    def priority(name: str) -> tuple[int, int, int]:
+    def priority(name: str) -> tuple[int, int]:
         if name not in last_seen:
-            return (1, 0, 0)  # never driver-checked
+            return (1, 0)  # never driver-checked
         rnd, rec = last_seen[name]
         if _check_failed(rec, REGISTRY[name].oracle is not None):
-            return (0, rnd, 0)  # failed / oracle never driver-verified
-        # green: oldest driver record first (freshness rotation);
-        # within one round, changed-since-checked code before
-        # unchanged — see the docstring for why round dominates
-        return (2, rnd, 0 if changed(name, rnd) else 1)
+            return (0, rnd)  # failed / oracle never driver-verified
+        return (2, rnd)  # green: oldest driver record first
 
     ordered = sorted(
         REGISTRY,

@@ -469,7 +469,8 @@ def test_containment_blocked_matches_inverted(spark) -> None:
     bit-identical to the distributed inverted index, capped and
     uncapped, and containment_pairs_auto must route this small
     corpus to the blocked plan (FlatMapGroupsInPandas) while the
-    inverted path stays shuffle-join shaped."""
+    inverted path stays shuffle-join shaped. Forced onto the inverted
+    route, containment_pairs_auto stores one frame, not two."""
     boiler_pre = " ".join(f"hdr{i}" for i in range(12))
     boiler_post = " ".join(f"ftr{i}" for i in range(12))
     quotes = {i: " ".join(f"q{i}w{j}" for j in range(15))
@@ -479,6 +480,7 @@ def test_containment_blocked_matches_inverted(spark) -> None:
              for i, q in quotes.items()]
     rows += [(200, "short doc"), (201, "")]  # shingle-less docs
     df = spark.createDataFrame(rows, ["doc_id", "text"])
+    jsc = spark.sparkContext._jsc
 
     def canon(frame):
         return sorted(
@@ -499,6 +501,13 @@ def test_containment_blocked_matches_inverted(spark) -> None:
             .executedPlan().toString()
         assert "FlatMapGroupsInPandas" in executed
         assert "CartesianProduct" not in executed
+        # postings_cap=0 forces the inverted route, which stores the
+        # shingled corpus and nothing else
+        before = set(jsc.getPersistentRDDs().keys())
+        routed = D.containment_pairs_auto(
+            df, threshold=0.9, n=8, max_df=max_df, postings_cap=0)
+        assert len(set(jsc.getPersistentRDDs().keys()) - before) == 1
+        assert canon(routed) == inv
 
 
 def test_substring_rewrite_cuts_planted_span_keeps_flanks(spark) -> None:

@@ -1,19 +1,17 @@
 """Driver-window ordering: the ~50-query CORRECTNESS prefix must
-surface (1) failed / never-oracle-verified records, (2) never-checked
-queries, then (3) green rows by OLDEST driver snapshot first
-(freshness rotation; within a round, changed-since-checked code
-before unchanged) — so a fix or a new oracle is driver-verified the
-very next round, and no green row ages indefinitely behind a round's
-anchor churn (the r14 policy change; see load_all's docstring)."""
+surface (1) failed / never-oracle-verified records, by round, (2)
+never-checked queries, then (3) green rows by OLDEST driver snapshot
+first (freshness rotation) — so a fix or a new oracle is
+driver-verified the very next round, and no green row ages
+indefinitely. The order comes from the CORRECTNESS records alone; the
+registry runs no git."""
 
 from __future__ import annotations
 
 from hands_on_trino_iceberg_superset_spark.queries import load_all
 from hands_on_trino_iceberg_superset_spark.queries.base import (
-    _changed_since_round,
     _check_failed,
     _last_driver_check,
-    _module_closure,
 )
 
 
@@ -35,24 +33,6 @@ def test_check_failed_flags():
                          has_oracle=False)
 
 
-def test_module_closure_includes_self_and_imports():
-    closure = _module_closure()
-    text = closure["queries.text"]
-    names = {p.name for p in text}
-    assert "text.py" in names
-    # queries/base.py is ordering infra imported by every module; it
-    # must NOT be a dependency edge or one ordering tweak marks the
-    # whole inventory changed
-    assert "base.py" not in names
-
-
-def test_changed_since_round_signature():
-    changed = _changed_since_round()
-    # unknown round / unknown module never mark anything changed
-    assert changed("queries.text", 9999) is False
-    assert changed("no.such.module", 1) is False
-
-
 def test_window_prefix_prioritizes_recheck():
     last = _last_driver_check()
     if not last:  # fresh checkout without CORRECTNESS files
@@ -70,154 +50,22 @@ def test_window_prefix_prioritizes_recheck():
             assert name in window, f"never-checked {name} outside window"
 
 
-def test_top_level_segments_anchors():
-    from hands_on_trino_iceberg_superset_spark.queries.base import (
-        _top_level_segments,
-    )
-
-    text = (
-        "X = 1\n"
-        "Y: int = 2\n"
-        "@deco(oracle=f'{X}')\n"
-        "def q():\n"
-        "    return X\n"
-        "class C:\n"
-        "    def m(self):\n"
-        "        return 1\n"
-    )
-    segs = _top_level_segments(text)
-    assert segs["const:X"] == "X = 1"
-    assert segs["const:Y"] == "Y: int = 2"
-    # decorator text is part of the def's segment (the oracle
-    # expression lives there)
-    assert segs["def:q"].startswith("@deco(oracle=")
-    assert "def m" in segs["def:C"]
-    assert segs[""] == text
-    # a doc tweak in an UNRELATED def leaves q's segment identical
-    segs2 = _top_level_segments(text.replace("return 1", "return 2"))
-    assert segs2["def:q"] == segs["def:q"]
-    assert segs2["def:C"] != segs["def:C"]
-
-
-def test_query_anchors_reach_helpers_and_oracle_builders():
-    """Anchor sets must include the registering function itself, the
-    operator helpers it calls (direct import AND module-alias
-    access), and decorator-expression oracle builders."""
-    from hands_on_trino_iceberg_superset_spark.queries.base import (
-        _query_anchors,
-    )
-
-    load_all()  # populate REGISTRY
-    anchors = _query_anchors()
-
-    def has(name, relsuffix, anchor):
-        return any(rp.endswith(relsuffix) and a == anchor
-                   for rp, a in anchors[name])
-
-    # the query fn itself
-    assert has("dedup_url_canonical", "queries/dedup.py",
-               "def:dedup_url_canonical")
-    # module-alias operator helper (D.canonical_url)
-    assert has("dedup_url_canonical", "operators/dedup.py",
-               "def:canonical_url")
-    # decorator-expression oracle builder + its constant
-    assert has("tokenizer_wordpiece_encode", "queries/curation.py",
-               "def:_wp_encode_oracle")
-    assert has("tokenizer_wordpiece_encode", "queries/curation.py",
-               "const:_WP_STEPS")
-    # helpers reached through the wordpiece operators module
-    assert has("tokenizer_wordpiece_encode", "operators/wordpiece.py",
-               "def:encode_words")
-
-
-def test_imported_const_anchored_in_defining_file():
-    """A constant pulled in via ``from X import CONST`` must anchor in
-    the file whose top-level assignment DEFINES it: the importing
-    module has no assignment segment, so anchoring there would diff
-    None == None at both revs and a change to the const's definition
-    would never mark the query as changed."""
-    from hands_on_trino_iceberg_superset_spark.queries.base import (
-        _const_anchor,
-        _file_segments,
-        _query_anchors,
-    )
-
-    load_all()
-    anchors = _query_anchors()
-    pkg = "hands_on_trino_iceberg_superset_spark"
-
-    # SEED_CTE is defined in queries/reference.py, imported into
-    # queries/bi.py where every bi_chart_* oracle uses it
-    rp_bi = f"{pkg}/queries/bi.py"
-    rp_ref = f"{pkg}/queries/reference.py"
-    assert _const_anchor(rp_bi, "SEED_CTE") == (rp_ref,
-                                                "const:SEED_CTE")
-    hit = [a for a in anchors["bi_chart_raw_orders"]
-           if a[1] == "const:SEED_CTE"]
-    assert hit and all(rp.endswith("queries/reference.py")
-                       for rp, _ in hit)
-
-    # every const anchor in the whole inventory must have a real
-    # segment in the working tree — None==None diffs are impossible
-    for name, keys in anchors.items():
-        for rp, anchor in keys:
-            if anchor.startswith("const:"):
-                segs = _file_segments(rp, None)
-                assert segs is not None and anchor in segs, \
-                    f"{name}: dangling const anchor {anchor} in {rp}"
-
-
-def test_changed_per_query_is_finer_than_closure():
-    """The whole point: one edit in a many-query module must not mark
-    every query in it changed. Against the latest round marker, the
-    anchor signal must flag at most as many queries as the closure
-    signal, and strictly fewer whenever closure inflation exists."""
-    from hands_on_trino_iceberg_superset_spark.queries.base import (
-        REGISTRY,
-        _changed_per_query,
-        _changed_since_round,
-        _round_markers,
-    )
-
-    load_all()  # populate REGISTRY
-    markers = _round_markers()
-    if not markers:
-        return
-    rnd = max(markers)
-    fine, coarse = _changed_per_query(), _changed_since_round()
-    pkg = "hands_on_trino_iceberg_superset_spark"
-    n_fine = n_coarse = 0
-    for name, spec in REGISTRY.items():
-        mod = spec.spark.__module__.split(pkg + ".", 1)[-1]
-        if fine(name, rnd):
-            n_fine += 1
-            # anchor-changed without closure-changed would mean the
-            # closure missed a dependency edge the anchors found —
-            # possible (closure is module-level, anchors cross into
-            # operators/) but coarse should dominate within modules
-        if coarse(mod, rnd):
-            n_coarse += 1
-    assert n_fine <= n_coarse
-    if n_coarse >= 30:  # closure inflation present -> anchors must win
-        assert n_fine < n_coarse / 2
-
-
-def _fabricated_order(base, monkeypatch, n_failed: int) -> tuple:
+def _fabricated_order(base, monkeypatch, n_failed: int,
+                      n_never: int = 0) -> tuple:
     """load_all() ordering with the first ``n_failed`` registry
-    entries fabricated as failed (class 0) and the rest green with
+    entries fabricated as failed (class 0), the last ``n_never``
+    absent from the records (never checked), and the rest green with
     ages cycling r1..r6; returns (ordered names, last-check map)."""
     names = list(base.REGISTRY)
     ok = {"rows_match": True, "schema_match": True, "hash_match": True,
           "spark_rows": 1, "oracle_rows": 1, "err": None}
     last = {}
-    for i, n in enumerate(names):
+    for i, n in enumerate(names[:len(names) - n_never]):
         if i < n_failed:
             last[n] = (7, {**ok, "hash_match": False})
         else:
             last[n] = (1 + (i % 6), ok)
     monkeypatch.setattr(base, "_last_driver_check", lambda: last)
-    monkeypatch.setattr(base, "_changed_per_query",
-                        lambda: (lambda name, rnd: False))
     return list(base.load_all()), last
 
 
@@ -225,8 +73,7 @@ def test_freshness_rotation_oldest_green_first(monkeypatch):
     """Green rows sort by OLDEST driver snapshot first: with 10
     failed queries, the window is 10 failed + the 40 globally oldest
     greens, and no green outside the window is older than one
-    inside (the freshness-rotation guarantee that replaced the
-    reserved-tail floor in r14)."""
+    inside."""
     from hands_on_trino_iceberg_superset_spark.queries import base
 
     base.load_all()  # populate REGISTRY
@@ -245,36 +92,28 @@ def test_freshness_rotation_oldest_green_first(monkeypatch):
     assert greens_older_out == []
 
 
-def test_changed_outranks_unchanged_within_a_round(monkeypatch):
-    """Within ONE snapshot round, rows whose code changed since the
-    check sort before unchanged ones — but a changed row never
-    outranks a green row with an OLDER snapshot (round dominates;
-    the r14 policy change)."""
+def test_never_checked_between_failed_and_green(monkeypatch):
+    """Queries absent from every driver record sort after every
+    failed row and before every green, whatever their registry
+    position."""
     from hands_on_trino_iceberg_superset_spark.queries import base
 
     base.load_all()
-    names = list(base.REGISTRY)
-    ok = {"rows_match": True, "schema_match": True,
-          "hash_match": True, "spark_rows": 1, "oracle_rows": 1,
-          "err": None}
-    # all green at alternating rounds 5/6; every round-6 row marked
-    # changed, round-5 rows unchanged
-    last = {n: (5 + (i % 2), ok) for i, n in enumerate(names)}
-    changed_names = {n for n in names if last[n][0] == 6}
-    monkeypatch.setattr(base, "_last_driver_check", lambda: last)
-    monkeypatch.setattr(
-        base, "_changed_per_query",
-        lambda: (lambda name, rnd: name in changed_names))
-    ordered = list(base.load_all())
-    n_r5 = sum(1 for n in names if last[n][0] == 5)
-    # every r5 row (unchanged) precedes every r6 row (changed)
-    assert all(last[n][0] == 5 for n in ordered[:n_r5])
-    assert all(n in changed_names for n in ordered[n_r5:])
+    ordered, last = _fabricated_order(base, monkeypatch, n_failed=10,
+                                      n_never=5)
+    never = [i for i, n in enumerate(ordered) if n not in last]
+    failed = [i for i, n in enumerate(ordered)
+              if n in last and last[n][1]["hash_match"] is False]
+    green = [i for i, n in enumerate(ordered)
+             if n in last and last[n][1]["hash_match"] is True]
+    assert len(never) == 5 and len(failed) == 10
+    assert max(failed) < min(never)
+    assert max(never) < min(green)
 
 
 def test_urgent_rows_never_displaced(monkeypatch):
     """Failed rows take every window slot they need before any
-    green — unchanged from the pre-r14 ordering."""
+    green."""
     from hands_on_trino_iceberg_superset_spark.queries import base
 
     base.load_all()
@@ -284,22 +123,31 @@ def test_urgent_rows_never_displaced(monkeypatch):
     assert all(last[n][1]["hash_match"] is False for n in window)
 
 
-def test_relative_base_resolves_init_one_level_correctly():
-    """Relative imports inside a package __init__ resolve against the
-    package ITSELF (level 1), not its parent — the arithmetic both
-    _import_const_origins and _resolve_imports share. A plain module
-    strips its filename part first."""
-    from hands_on_trino_iceberg_superset_spark.queries import base
+def test_load_all_runs_no_git(monkeypatch):
+    """A fresh import of the query registry orders the inventory
+    without starting a process: every ``subprocess.run`` is recorded
+    and refused."""
+    import importlib
+    import subprocess
+    import sys
 
-    pkg = "hands_on_trino_iceberg_superset_spark"
-    # plain module: 'from . import X' -> containing package
-    assert base._relative_base(f"{pkg}/queries/foo.py", 1) \
-        == [pkg, "queries"]
-    assert base._relative_base(f"{pkg}/queries/foo.py", 2) == [pkg]
-    # package __init__: 'from .mod import C' -> the package itself
-    assert base._relative_base(f"{pkg}/queries/__init__.py", 1) \
-        == [pkg, "queries"]
-    assert base._relative_base(f"{pkg}/queries/__init__.py", 2) \
-        == [pkg]
-    # deeper than the tree: conservative empty base
-    assert base._relative_base(f"{pkg}/queries/foo.py", 5) == []
+    calls = []
+
+    def refuse(*args, **kwargs):
+        calls.append(args)
+        raise OSError("the query registry must not start processes")
+
+    monkeypatch.setattr(subprocess, "run", refuse)
+    pkg = importlib.import_module("hands_on_trino_iceberg_superset_spark")
+    prefix = pkg.__name__ + ".queries"
+    # re-import the registry and every query module from scratch;
+    # monkeypatch puts the original modules back afterwards
+    monkeypatch.setattr(pkg, "queries", pkg.queries)
+    for name in [m for m in sys.modules
+                 if m == prefix or m.startswith(prefix + ".")]:
+        monkeypatch.delitem(sys.modules, name)
+    fresh = importlib.import_module(prefix)
+    assert fresh.REGISTRY == {}
+    inv = fresh.load_all()
+    assert len(inv) == len(load_all())
+    assert calls == []
